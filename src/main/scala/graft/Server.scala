@@ -47,23 +47,22 @@ object Server {
   /** MIME type of the Arrow IPC stream format on the wire. */
   val ArrowMime = "application/vnd.apache.arrow.stream"
 
-  /** Start serving on `port` (0 = ephemeral). Each request executes in a
-    * CLONE of `spark` (own temp-view catalog + runtime conf over the shared
-    * context), so concurrent queries cannot race on the engine's step-named
-    * views — which also means runtime session state a caller set AFTER
-    * building `spark` (conf.set, temp views, extra UDFs) is NOT visible to
-    * queries unless re-applied via `sessionInit`, which runs once per
-    * request on the fresh clone (default: register the graft SQL kernels).
-    * Builder-time configs survive through the shared context.
+  /** Start serving on `port` (0 = ephemeral). Every request executes in
+    * `spark` itself, on which the graft SQL kernels are registered once
+    * here: the engine binds each query's statements to its own inputs
+    * without touching the session catalog, so concurrent requests that
+    * share catalog and step names cannot see each other's relations.
+    * Session state a caller sets (conf, temp views, functions) is visible
+    * to every request.
     *
     * `idleShutdownMs`: when set, a daemon watcher stops the server (and runs
     * `onStop`) once no request has STARTED or been IN FLIGHT for that long. */
   def start(
       spark: SparkSession,
       port: Int,
-      sessionInit: SparkSession => Unit = graft.functions.GraftFunctions.registerAll,
       idleShutdownMs: Option[Long] = None,
       onStop: () => Unit = () => ()): HttpServer = {
+    graft.functions.GraftFunctions.registerAll(spark)
     val engine = new BuzzEngine(Map.empty)
     val server = HttpServer.create(new InetSocketAddress(port), 0)
 
@@ -106,13 +105,7 @@ object Server {
       } else {
         val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
         try {
-          // each request gets a CLONED session (own temp-view catalog and
-          // conf over the shared context): BuzzEngine.run registers views
-          // under the query's own step names, so two concurrent queries in
-          // ONE session would race between register and drop
-          val session = spark.newSession()
-          sessionInit(session)
-          val result = engine.runJson(session, body)
+          val result = engine.runJson(spark, body)
           val wantsArrow = Option(ex.getRequestHeaders.getFirst("Accept"))
             .exists(_.contains(ArrowMime))
           if (wantsArrow)
@@ -133,9 +126,7 @@ object Server {
       } else {
         val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
         try {
-          val session = spark.newSession()
-          sessionInit(session)
-          respond(ex, 200, engine.explainJson(session, body))
+          respond(ex, 200, engine.explainJson(spark, body))
         } catch {
           case e: BuzzException.BuzzError => respond(ex, 400, jsonError(e.getMessage))
           case e: Exception =>
@@ -193,7 +184,6 @@ object Server {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.registerAll(spark)
     // serverless parity: exit after the reference's 300 s idle default
     // (hcomb_service.rs:24); <= 0 disables and the server runs until killed
     val idleSec = sys.env.getOrElse("SPARK_GRAFT_IDLE_SHUTDOWN_SEC", "300").toDouble

@@ -14,13 +14,14 @@ import graft.sources.{CatalogResolver, SchemaVerifier, SplittableCatalog}
   * fuse_service.rs:61-146`): plan → dispatch reduce stage → dispatch one
   * worker per file → workers stream pre-aggregated batches into the reducer →
   * collect. In Spark the whole thing is ONE lazily-composed query: the map
-  * SQL runs against the pruned file scan, its result is registered as a temp
-  * view under the map step's name, and the reduce SQL runs over that view.
-  * Spark inserts the map→reduce exchange itself (a shuffle), does
-  * partial/final aggregation automatically, and schedules file splits across
-  * executors — which is exactly the hbee/hcomb fleet, minus the bespoke
-  * transport. No collect() happens between the stages, so the exchange stays
-  * pipelined and spillable at 100 TB.
+  * statement is bound to the pruned file scan, the reduce statement is bound
+  * to the map statement's plan ([[Statement.bind]]), and the session catalog
+  * is neither read for those names nor written. Spark inserts the
+  * map→reduce exchange itself (a shuffle), does partial/final aggregation
+  * automatically, and schedules file splits across executors — which is
+  * exactly the hbee/hcomb fleet, minus the bespoke transport. No collect()
+  * happens between the stages, so the exchange stays pipelined and
+  * spillable at 100 TB.
   */
 final class BuzzEngine(
     catalogs: Map[String, SplittableCatalog],
@@ -38,83 +39,21 @@ final class BuzzEngine(
 
   /** Validate + build the final DataFrame (lazy; no job runs until an
     * action). Uses [[QueryPlanner.validateAndPrune]] rather than the full
-    * [[plan]]: the statements are analyzed ONCE, against the real source,
-    * instead of first against empty relations — halving the per-query
-    * analysis work the two-stage-overhead gate pays on every cold rep.
-    * Analysis failures still surface as [[BuzzException.PlanError]] before
-    * any job runs (`spark.sql` analyzes eagerly; see `analyzed`).
+    * [[plan]]: each statement is bound ONCE, to the real source, instead
+    * of first to an empty relation. Analysis failures still surface as
+    * [[BuzzException.PlanError]] before any job runs.
     *
-    * The catalog and map-output temp views exist only while the statements
-    * are analyzed: `spark.sql` resolves views eagerly, so the returned
-    * DataFrame keeps its resolved plan after the views are dropped, and any
-    * SAME-NAMED session view a user had registered (e.g. via
-    * `Tables.registerAll`) is restored — running a query must not mutate
-    * session catalog state. Concurrent `run` calls in one session that share
-    * a catalog or step name would still race between register and drop;
-    * use distinct step names (or sessions) for concurrent queries. */
+    * A run reads the map statement's relation from the pruned catalog and
+    * the reduce statement's from the map plan, whatever temp views the
+    * session holds under the same names, and leaves the session catalog
+    * as it found it; concurrent runs in one session may share catalog and
+    * step names. */
   def run(spark: SparkSession, query: BuzzQuery): DataFrame =
     buildDf(spark, validateAndPrune(spark, query))
 
   private def validateAndPrune(spark: SparkSession, query: BuzzQuery): PrunedPlan = {
     val resolved = catalogs ++ CatalogResolver.resolve(spark, query.catalogs)
     new QueryPlanner(resolved).validateAndPrune(spark, query)
-  }
-
-  /** `spark.sql` with analysis failures translated to the planner's error
-    * type — the run path's analysis happens here (against the real
-    * source), so bad SQL must fault identically to [[plan]]'s eager
-    * empty-relation analysis. Runtime failures are untouched (they occur
-    * at action time, after this returns). */
-  private def analyzed(spark: SparkSession, sql: String): DataFrame =
-    try spark.sql(sql)
-    catch {
-      case e: BuzzException.BuzzError => throw e
-      case e: Exception =>
-        throw new BuzzException.PlanError(s"analysis of '$sql' failed: ${e.getMessage}")
-    }
-
-  /** Analyze `sql` with its single relation reference BOUND DIRECTLY to
-    * `df`'s analyzed plan (a SubqueryAlias substituted for the
-    * UnresolvedRelation before analysis) — the hot run path. The session
-    * catalog is never touched: no temp-view create/drop/restore churn
-    * (measured ~30-40 ms of the cold two-stage rep's fixed cost), no
-    * same-named-view races between concurrent runs, and the
-    * view-restoration contract holds trivially. Statements containing a
-    * CTE fall back to the caller's view path: a WITH clause can shadow
-    * the bound name, and Spark's own scoping — inner scope wins — must
-    * decide that, not this substitution.
-    *
-    * Resolution of the bound name follows the session's case-sensitivity
-    * rule, matching [[QueryPlanner.validateAndPrune]]'s `resolves` (the
-    * statement already passed soleSource, so the bound name is its only
-    * relation). Analysis failures map to PlanError like [[analyzed]]. */
-  private def analyzedAgainst(
-      spark: SparkSession, sql: String, name: String, df: DataFrame): Option[DataFrame] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-    import org.apache.spark.sql.catalyst.plans.logical.{SubqueryAlias, UnresolvedWith}
-    val parsed =
-      try spark.sessionState.sqlParser.parsePlan(sql)
-      catch {
-        case e: Exception =>
-          throw new BuzzException.PlanError(s"cannot parse '$sql': ${e.getMessage}")
-      }
-    val hasCte = parsed.collectFirst { case w: UnresolvedWith => w }.isDefined
-    if (hasCte) None
-    else {
-      def resolves(a: String, b: String): Boolean =
-        if (spark.sessionState.conf.caseSensitiveAnalysis) a == b else a.equalsIgnoreCase(b)
-      val bound = parsed.transformUp {
-        case r: UnresolvedRelation
-            if resolves(r.multipartIdentifier.mkString("."), name) =>
-          SubqueryAlias(name, df.queryExecution.analyzed)
-      }
-      try Some(org.apache.spark.sql.graft.PlanBridge.ofRows(spark, bound))
-      catch {
-        case e: BuzzException.BuzzError => throw e
-        case e: Exception =>
-          throw new BuzzException.PlanError(s"analysis of '$sql' failed: ${e.getMessage}")
-      }
-    }
   }
 
   private def buildDf(spark: SparkSession, p: PrunedPlan): DataFrame = {
@@ -136,28 +75,8 @@ final class BuzzEngine(
         p.files.map(_.key), p.catalog.schema, spark.sessionState.newHadoopConf(),
         missingNullableOk = p.catalog.missingNullableOk)
     val source = p.catalog.read(spark, p.files)
-    // hot path: bind each statement's sole relation to its input plan
-    // directly (no session-catalog mutation — see analyzedAgainst); a
-    // statement carrying a CTE takes the temp-view fallback below so WITH
-    // scoping behaves exactly as spark.sql would resolve it
-    val direct = analyzedAgainst(spark, p.mapStep.sql, p.catalog.name, source)
-      .flatMap(mapDf => analyzedAgainst(spark, p.reduceStep.sql, p.mapStep.name, mapDf))
-    direct.getOrElse {
-      val names = Seq(p.catalog.name, p.mapStep.name).distinct
-      val sessionCatalog = spark.sessionState.catalog
-      val prior = names.map(n => n -> sessionCatalog.getRawTempView(n))
-      try {
-        source.createOrReplaceTempView(p.catalog.name)
-        val mapDf = analyzed(spark, p.mapStep.sql)
-        mapDf.createOrReplaceTempView(p.mapStep.name)
-        analyzed(spark, p.reduceStep.sql)
-      } finally {
-        names.foreach(spark.catalog.dropTempView)
-        prior.foreach { case (n, v) =>
-          v.foreach(raw => sessionCatalog.createTempView(n, raw, overrideIfExists = true))
-        }
-      }
-    }
+    val mapDf = p.map.bind(spark, source.queryExecution.analyzed)
+    p.reduce.bind(spark, mapDf.queryExecution.analyzed)
   }
 
   def runJson(spark: SparkSession, json: String): DataFrame =

@@ -1,15 +1,15 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.StructType
 
 import graft.model._
 import graft.sources.{SizedFile, SplittableCatalog}
 
 /** The validated distributed plan: which files the map stage reads, the two
-  * SQL statements, and the derived map-output schema.
+  * steps and their parsed statements, and the derived output schemas.
   * Reference: `DistributedPlan` at
   * `/root/reference/code/src/services/fuse/query_planner.rs:17-44`. Spark
   * owns zone/worker assignment, so zones collapse to a partition count. */
@@ -18,22 +18,23 @@ final case class DistributedPlan(
     files: Seq[SizedFile],
     mapStep: BuzzStep,
     reduceStep: BuzzStep,
+    map: Statement,
+    reduce: Statement,
     mapOutputSchema: StructType,
     reduceOutputSchema: StructType)
 
 /** [[DistributedPlan]] minus the derived output schemas: everything the
-  * EXECUTION path needs. `run` builds the real DataFrames anyway, so
-  * deriving schemas from empty relations first would analyze each
-  * statement twice per query — a fixed cost the two-stage-overhead gate
-  * pays on every cold rep. `mapSource` is the identifier the map SQL
-  * reads (as written, pre case-normalization), kept for the plan-time
-  * empty-relation analysis that [[QueryPlanner.plan]] layers on top. */
+  * EXECUTION path needs. `run` binds the statements to the real source
+  * anyway, so deriving schemas from empty relations first would analyze
+  * each statement twice per query — a fixed cost the two-stage-overhead
+  * gate pays on every cold rep. */
 final case class PrunedPlan(
     catalog: SplittableCatalog,
     files: Seq[SizedFile],
     mapStep: BuzzStep,
     reduceStep: BuzzStep,
-    mapSource: String)
+    map: Statement,
+    reduce: Statement)
 
 /** Validates a two-step buzz query and prunes the catalog, mirroring
   * `QueryPlanner.plan` (`/root/reference/code/src/services/fuse/
@@ -51,20 +52,17 @@ final case class PrunedPlan(
 final class QueryPlanner(catalogs: Map[String, SplittableCatalog]) {
 
   /** Full validation: [[validateAndPrune]] plus eager derivation of both
-    * output schemas by analyzing each statement against an empty relation
-    * — analysis errors surface HERE, with no source read. The execution
+    * output schemas by binding the map statement to an empty relation of
+    * the catalog schema and the reduce statement to that map plan —
+    * analysis errors surface HERE, with no source read. The execution
     * path ([[BuzzEngine.run]]) uses [[validateAndPrune]] directly and
-    * analyzes each statement once against the real source instead. */
+    * binds each statement once, to the real source, instead. */
   def plan(spark: SparkSession, query: BuzzQuery): DistributedPlan = {
     val v = validateAndPrune(spark, query)
-    // Analyze the map SQL against an empty relation to derive its output
-    // schema and surface analysis errors at plan time, then validate the
-    // reduce SQL the same way against that schema.
-    val mapSchema =
-      analyzeAgainstEmpty(spark, v.mapStep.sql, v.mapSource, v.catalog.fullSchema)
-    val reduceSchema =
-      analyzeAgainstEmpty(spark, v.reduceStep.sql, v.mapStep.name, mapSchema)
-    DistributedPlan(v.catalog, v.files, v.mapStep, v.reduceStep, mapSchema, reduceSchema)
+    val mapDf = v.map.bind(spark, LocalRelation(DataTypeUtils.toAttributes(v.catalog.fullSchema)))
+    val reduceDf = v.reduce.bind(spark, mapDf.queryExecution.analyzed)
+    DistributedPlan(v.catalog, v.files, v.mapStep, v.reduceStep, v.map, v.reduce,
+      mapDf.schema, reduceDf.schema)
   }
 
   /** Structural validation + file pruning — every plan-SHAPE error (step
@@ -98,15 +96,16 @@ final class QueryPlanner(catalogs: Map[String, SplittableCatalog]) {
     // identifier comparison follows the session's resolution rules
     // (spark.sql.caseSensitive=false by default) — `FROM Evt_Part` must
     // resolve a catalog registered as `evt_part`, exactly as spark.sql would
-    def resolves(a: String, b: String): Boolean =
-      if (spark.sessionState.conf.caseSensitiveAnalysis) a == b else a.equalsIgnoreCase(b)
+    val resolves = spark.sessionState.conf.resolver
 
-    val mapSource = soleSource(spark, mapStep.sql)
+    val map = Statement.parse(spark, mapStep.sql)
+    val mapSource = soleSource(map)
     val catalog = catalogs.collectFirst { case (n, c) if resolves(n, mapSource) => c }
       .getOrElse(
         throw new BuzzException.PlanError(s"map step reads unknown table '$mapSource'"))
 
-    val reduceSource = soleSource(spark, reduceStep.sql)
+    val reduce = Statement.parse(spark, reduceStep.sql)
+    val reduceSource = soleSource(reduce)
     if (!resolves(reduceSource, mapStep.name))
       throw new BuzzException.PlanError(
         s"reduce step must read the map step's output '${mapStep.name}', reads '$reduceSource'")
@@ -121,76 +120,27 @@ final class QueryPlanner(catalogs: Map[String, SplittableCatalog]) {
     val pruned = catalog.prune(spark, mapStep.partitionFilter)
     val files =
       if (catalog.format == "parquet" || catalog.format == "orc")
-        graft.sources.ZoneMap.pruneForQuery(
-          spark, catalog.schema, pruned, mapStep.sql, catalog.format)
+        graft.sources.ZoneMap.pruneForPlan(
+          spark, catalog.schema, pruned, map.plan, catalog.format)
       else pruned // csv/json carry no footer stats; nothing to prune by
-    PrunedPlan(catalog, files, mapStep, reduceStep, mapSource)
+    PrunedPlan(catalog, files, mapStep, reduceStep, map, reduce)
   }
 
   /** The single base table a statement reads; rejects multi-source plans
     * (joins/unions/subquery sources — including SELF-joins, which have one
     * distinct name but two relation inputs), parity with the reference's
     * linear-plan restriction (every >1-input plan node is rejected,
-    * services/utils.rs:12-15). Compares full multipart identifiers so
-    * `db1.t` and `db2.t` are different sources. */
-  private[graft] def soleSource(spark: SparkSession, sql: String): String = {
-    val parsed: LogicalPlan =
-      try spark.sessionState.sqlParser.parsePlan(sql)
-      catch {
-        case e: Exception => throw new BuzzException.PlanError(s"cannot parse '$sql': ${e.getMessage}")
-      }
-    val occurrences = relationNames(parsed)
-    occurrences match {
+    * services/utils.rs:12-15). The reads come from the CTE-expanded
+    * statement walk, so a read inside a CTE body or an expression
+    * subquery counts like any other, and a CTE referenced twice is two
+    * reads. Compares full multipart identifiers so `db1.t` and `db2.t`
+    * are different sources. */
+  private def soleSource(statement: Statement): String =
+    statement.reads.map(_.mkString(".")) match {
       case Seq(one) => one
-      case Seq()    => throw new BuzzException.PlanError(s"statement reads no table: $sql")
+      case Seq()    => throw new BuzzException.PlanError(s"statement reads no table: ${statement.sql}")
       case many     => throw new BuzzException.PlanError(
         "buzz statements are single-table (linear plans); found " +
           s"${many.length} relation reads: ${many.mkString(", ")}")
     }
-  }
-
-  /** Every relation a parsed statement reads — INCLUDING relations inside
-    * expression subqueries (`WHERE x IN (SELECT ...)`), which
-    * `LogicalPlan.collect` alone misses because subquery plans live inside
-    * expression trees, not the plan's children. Without this, a subquery
-    * smuggles a second table read past the single-table validation. */
-  private def relationNames(plan: LogicalPlan): Seq[String] = {
-    val direct = plan.collect {
-      case r: UnresolvedRelation => r.multipartIdentifier.mkString(".")
-    }
-    val nested = plan.flatMap { node =>
-      node.expressions.flatMap(_.collect {
-        case s: org.apache.spark.sql.catalyst.expressions.SubqueryExpression => s.plan
-      })
-    }.flatMap(relationNames)
-    direct ++ nested
-  }
-
-  private def analyzeAgainstEmpty(
-      spark: SparkSession, sql: String, viewName: String, schema: StructType): StructType = {
-    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    withTempView(spark, viewName, empty) {
-      try spark.sql(sql).schema
-      catch {
-        case e: BuzzException.BuzzError => throw e
-        case e: Exception => throw new BuzzException.PlanError(s"analysis of '$sql' failed: ${e.getMessage}")
-      }
-    }
-  }
-
-  /** Register `df` under `name` for the duration of `body`, then restore
-    * whatever temp view previously held that name — analysis-time planning
-    * must not destroy session catalog state as a side effect (a view
-    * registered via e.g. `Tables.registerAll` would otherwise silently
-    * vanish after `plan()`). */
-  private def withTempView[T](spark: SparkSession, name: String, df: DataFrame)(body: => T): T = {
-    val sessionCatalog = spark.sessionState.catalog
-    val prior = sessionCatalog.getRawTempView(name)
-    df.createOrReplaceTempView(name)
-    try body
-    finally {
-      spark.catalog.dropTempView(name)
-      prior.foreach(v => sessionCatalog.createTempView(name, v, overrideIfExists = true))
-    }
-  }
 }

@@ -547,8 +547,10 @@ object DeltaCatalog {
         def featsOf(name: String): Seq[String] =
           if (!p.schema.fieldNames.contains(name) || p.isNullAt(p.fieldIndex(name))) Nil
           else p.getAs[scala.collection.Seq[String]](name).toSeq
-        recordProtocol(state, p.getAs[Long]("minReaderVersion"),
-          p.getAs[Long]("minWriterVersion"),
+        // the Delta spec types both versions as int; checkpoints written
+        // by this engine's sink carry longs
+        recordProtocol(state, p.getAs[Number]("minReaderVersion").longValue,
+          p.getAs[Number]("minWriterVersion").longValue,
           featsOf("readerFeatures"), featsOf("writerFeatures"))
       }
       if (cols("txn") && !row.isNullAt(row.fieldIndex("txn"))) {

@@ -439,7 +439,8 @@ object ZoneMap {
       ColumnRange(math.max(lo, o.lo), math.min(hi, o.hi))
   }
 
-  /** Range constraints provably REQUIRED by `sql` on raw columns of its
+  /** Range constraints provably REQUIRED by `statement` (a parsed,
+    * CTE-free [[graft.plans.Statement]] plan) on raw columns of its
     * (single) base relation: only top-level conjuncts of Filter nodes
     * sitting DIRECTLY on the relation (through subquery aliases) are
     * read — a filter above a Project/Aggregate may reference an alias
@@ -450,15 +451,13 @@ object ZoneMap {
     * catalog's numeric DATA columns; comparison is case-insensitive to
     * match the session's default resolution. */
   private[graft] def harvestRanges(
-      spark: SparkSession, sql: String, candidates: Set[String],
+      statement: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      candidates: Set[String],
       allColumns: Set[String] = Set.empty): Map[String, ColumnRange] = {
     import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.catalyst.plans.logical.{Filter => LFilter, LogicalPlan, SubqueryAlias}
     val lowered = candidates.map(_.toLowerCase(java.util.Locale.ROOT))
-    val parsed: LogicalPlan =
-      try spark.sessionState.sqlParser.parsePlan(sql)
-      catch { case _: Exception => return Map.empty }
     def onRelation(p: LogicalPlan): Boolean = p match {
       case _: UnresolvedRelation => true
       case s: SubqueryAlias      => onRelation(s.child)
@@ -494,7 +493,7 @@ object ZoneMap {
     val ranges = scala.collection.mutable.Map[String, ColumnRange]()
     def add(c: String, r: ColumnRange): Unit =
       if (lowered.contains(c)) ranges(c) = ranges.get(c).fold(r)(_.merge(r))
-    val conds = parsed.collect {
+    val conds = statement.collect {
       case LFilter(cond, child) if onRelation(child) => cond
     }.flatMap(conjuncts)
     conds.foreach {
@@ -539,6 +538,17 @@ object ZoneMap {
       files: Seq[SizedFile],
       mapSql: String,
       format: String = "parquet",
+      exhaustive: Boolean = false): Seq[SizedFile] =
+    pruneForPlan(spark, schema, files,
+      graft.plans.Statement.parse(spark, mapSql).plan, format, exhaustive)
+
+  /** [[pruneForQuery]] over an already parsed statement. */
+  def pruneForPlan(
+      spark: SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      files: Seq[SizedFile],
+      statement: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      format: String,
       exhaustive: Boolean = false): Seq[SizedFile] = {
     import org.apache.spark.sql.types._
     // a single surviving file saves a QUERY nothing (the scan reads it
@@ -548,7 +558,7 @@ object ZoneMap {
       case f if Seq(ByteType, ShortType, IntegerType, LongType, FloatType, DoubleType)
         .contains(f.dataType) => f.name
     }.toSet
-    val ranges = harvestRanges(spark, mapSql, numeric,
+    val ranges = harvestRanges(statement, numeric,
       allColumns = schema.fieldNames.toSet)
     if (ranges.isEmpty) return files
     // resolve harvested lowercase names back to the schema's declared case,

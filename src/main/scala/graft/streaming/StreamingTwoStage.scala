@@ -82,24 +82,12 @@ object StreamingTwoStage {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val s = batch.sparkSession
-        val prior = Seq(p.catalog.name, p.mapStep.name)
-          .map(n => n -> s.sessionState.catalog.getRawTempView(n))
-        try {
-          batch.createOrReplaceTempView(p.catalog.name)
-          val mapOut = s.sql(p.mapStep.sql)
-          received.synchronized { received ++= mapOut.collect() }
-          val acc = s.createDataFrame(
-            s.sparkContext.parallelize(received.synchronized(received.toSeq)),
-            p.mapOutputSchema)
-          acc.createOrReplaceTempView(p.mapStep.name)
-          onResult(s.sql(p.reduceStep.sql), batchId)
-        } finally {
-          prior.foreach { case (n, v) =>
-            s.catalog.dropTempView(n)
-            v.foreach(raw =>
-              s.sessionState.catalog.createTempView(n, raw, overrideIfExists = true))
-          }
-        }
+        val mapOut = p.map.bind(s, batch.queryExecution.analyzed)
+        received.synchronized { received ++= mapOut.collect() }
+        val acc = s.createDataFrame(
+          s.sparkContext.parallelize(received.synchronized(received.toSeq)),
+          p.mapOutputSchema)
+        onResult(p.reduce.bind(s, acc.queryExecution.analyzed), batchId)
       }
       .start()
   }

@@ -527,6 +527,31 @@ class DeltaProtocolSpec extends AnyFunSuite {
     }
   }
 
+  test("a checkpoint with Delta-spec INT protocol versions replays") {
+    import org.apache.spark.sql.types.IntegerType
+    val dir = tmpDir("cp_int_protocol")
+    twoFileTable(dir)
+    val v = Sinks.deltaCheckpoint(spark, dir, cleanCommits = true)
+    // rewrite the checkpoint with int-typed protocol fields, as delta-rs
+    // and Delta Spark write them
+    val cpName = f"$v%020d.checkpoint.parquet"
+    val cp = s"$dir/_delta_log/$cpName"
+    val out = tmpDir("cp_int_protocol_out")
+    spark.read.parquet(cp)
+      .withColumn("protocol", col("protocol")
+        .withField("minReaderVersion", col("protocol.minReaderVersion").cast(IntegerType))
+        .withField("minWriterVersion", col("protocol.minWriterVersion").cast(IntegerType)))
+      .coalesce(1).write.mode("overwrite").parquet(out)
+    val part = new java.io.File(out).listFiles().find(_.getName.endsWith(".parquet")).get
+    Files.move(part.toPath, Paths.get(cp), java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.deleteIfExists(Paths.get(s"$dir/_delta_log/.$cpName.crc")) // the old file's checksum
+    val written = spark.read.parquet(cp)
+    assert(written.select("protocol.minReaderVersion").schema.head.dataType == IntegerType)
+    assert(written.where(col("protocol").isNotNull).count() == 1)
+    DeltaCatalog.invalidateReplayCache()
+    assert(allIds(dir) == ((0L until 10L) ++ (100L until 110L)))
+  }
+
   test("vacuum refuses a window reaching below the tombstone expiry watermark; the floor is monotone") {
     val dir = tmpDir("vac_window")
     twoFileTable(dir)

@@ -159,18 +159,22 @@ class EngineSpec extends AnyFunSuite {
     // (pruning on it would drop files the query needs)
     assert(planFiles(
       "SELECT sum(id) AS s FROM (SELECT v AS id FROM zt) q WHERE id > 1000") == 4)
+    // ... nor one on a CTE that shadows the catalog name
+    assert(planFiles(
+      "WITH zt AS (SELECT v AS id FROM zt) SELECT sum(id) AS s FROM zt WHERE id > 1000") == 4)
     // no harvestable predicate: no footer reads, full file list
     assert(planFiles("SELECT sum(v) AS s FROM zt") == 4)
     // a struct-FIELD reference whose head is a declared column must not
     // be harvested as the top-level column of the same name (pruning by
     // the wrong column's stats would silently drop needed files)
     import graft.sources.ZoneMap
-    assert(ZoneMap.harvestRanges(spark,
-      "SELECT sum(v) AS s FROM zt WHERE props.id > 100",
+    def parsed(sql: String) = graft.plans.Statement.parse(spark, sql).plan
+    assert(ZoneMap.harvestRanges(
+      parsed("SELECT sum(v) AS s FROM zt WHERE props.id > 100"),
       Set("id"), allColumns = Set("id", "v", "props")).isEmpty)
     // ...while a genuine table-qualified reference still harvests
-    assert(ZoneMap.harvestRanges(spark,
-      "SELECT sum(v) AS s FROM zt t WHERE t.id > 100",
+    assert(ZoneMap.harvestRanges(
+      parsed("SELECT sum(v) AS s FROM zt t WHERE t.id > 100"),
       Set("id"), allColumns = Set("id", "v")).nonEmpty)
     // UNION ALL of the same table would conjoin both branches' filters
     // into nonsense ranges — the planner's linear-statement validation
@@ -446,5 +450,79 @@ class EngineSpec extends AnyFunSuite {
         "format": "json", "schema": "id NOT_A_TYPE"}"""))
     }
     assert(badDdl.getMessage.contains("invalid schema DDL"))
+  }
+
+  /** A catalog `t` over one parquet file with column `a` = 0..9. */
+  private def tenRows(): StaticCatalog = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_bind").toString
+    (0L until 10L).toDF("a").coalesce(1).write.mode("overwrite").parquet(dir)
+    StaticCatalog.overPath(spark, "t", dir)
+  }
+
+  private def steps(mapSql: String, reduceSql: String) = BuzzQuery(
+    Seq(
+      BuzzStep(mapSql, "m", BuzzStepType.HBee, None),
+      BuzzStep(reduceSql, "r", BuzzStepType.HComb, None)),
+    BuzzCapacity(1), Nil)
+
+  test("a read only inside an expression subquery binds the catalog, not a session view") {
+    import spark.implicits._
+    val eng = new BuzzEngine(Map("t" -> tenRows()))
+    val q = steps("SELECT 1 AS c WHERE 3 IN (SELECT a FROM t)", "SELECT c FROM m")
+    assert(eng.run(spark, q).collect().map(_.getInt(0)).toSeq == Seq(1))
+    // a same-named session view (values 100..104) must not be what is read
+    (100L until 105L).toDF("a").createOrReplaceTempView("t")
+    try assert(eng.run(spark, q).collect().map(_.getInt(0)).toSeq == Seq(1))
+    finally spark.catalog.dropTempView("t")
+  }
+
+  test("CTE scoping matches spark.sql over temp views (differential)") {
+    val source = tenRows()
+    val eng = new BuzzEngine(Map("t" -> source))
+    // the reference: the catalog and the map output as temp views, both
+    // statements through spark.sql — the binding this engine replaced
+    def viaViews(q: BuzzQuery): Seq[String] =
+      try {
+        source.read(spark, source.files).createOrReplaceTempView("t")
+        spark.sql(q.steps(0).sql).createOrReplaceTempView("m")
+        spark.sql(q.steps(1).sql).collect().map(_.toString).sorted.toSeq
+      } finally Seq("t", "m").foreach(spark.catalog.dropTempView)
+    def agrees(mapSql: String, reduceSql: String): Unit = {
+      val q = steps(mapSql, reduceSql)
+      val got = eng.run(spark, q).collect().map(_.toString).sorted.toSeq
+      assert(got.nonEmpty && got == viaViews(q), s"$mapSql | $reduceSql")
+    }
+    // a CTE shadowing the catalog name; its body reads the catalog
+    agrees("WITH t AS (SELECT a * 2 AS a FROM t WHERE a > 3) SELECT sum(a) AS s FROM t",
+      "SELECT s FROM m")
+    // a CTE in the reduce step over, and shadowing, the step name
+    agrees("SELECT a, a % 3 AS g FROM t",
+      "WITH m AS (SELECT g, a * 10 AS a FROM m) SELECT g, sum(a) AS s FROM m GROUP BY g")
+    // a nested WITH in a subquery shadows the outer CTE it reads
+    agrees("WITH u AS (SELECT a FROM t WHERE a < 5) " +
+      "SELECT n FROM (WITH u AS (SELECT a FROM u WHERE a > 1) SELECT count(*) AS n FROM u) q",
+      "SELECT n FROM m")
+    // ... and one inside an expression subquery
+    agrees("WITH u AS (SELECT a + 100 AS a FROM t) " +
+      "SELECT a FROM u WHERE a - 100 IN (WITH u AS (SELECT 3 AS a) SELECT a FROM u)",
+      "SELECT a FROM m")
+    // CTE names resolve case-insensitively, like the session's identifiers
+    agrees("WITH Big AS (SELECT a FROM t WHERE a >= 5) SELECT count(*) AS n FROM BIG",
+      "SELECT n FROM M")
+    // a CTE referenced twice is two reads of the catalog: the self-join rule
+    val twice = intercept[BuzzException.PlanError] {
+      eng.run(spark, steps(
+        "WITH u AS (SELECT a FROM t) SELECT x.a FROM u x JOIN u y ON x.a = y.a",
+        "SELECT a FROM m"))
+    }
+    assert(twice.getMessage.contains("single-table"), twice.getMessage)
+    val recursive = intercept[BuzzException.PlanError] {
+      eng.run(spark, steps(
+        "WITH RECURSIVE r AS (SELECT a FROM t UNION ALL SELECT a + 1 FROM r WHERE a < 3) " +
+          "SELECT count(*) AS n FROM r",
+        "SELECT n FROM m"))
+    }
+    assert(recursive.getMessage.contains("WITH RECURSIVE is not supported"), recursive.getMessage)
   }
 }

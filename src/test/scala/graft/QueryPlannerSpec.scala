@@ -60,6 +60,21 @@ class QueryPlannerSpec extends AnyFunSuite {
     assert(e.getMessage.contains("single-table"), e.getMessage)
   }
 
+  test("a CTE body cannot smuggle a different table past validation") {
+    import spark.implicits._
+    // the session holds a view `other`: the map step must still read only
+    // its catalog, so the CTE body's read of `other` is rejected
+    (0L until 1000L).toDF("secret").createOrReplaceTempView("other")
+    try {
+      val e = intercept[BuzzException.PlanError] {
+        planner.plan(spark, twoSteps(
+          "WITH test AS (SELECT secret AS data_col FROM other) SELECT count(*) c FROM test",
+          "SELECT * FROM mapper"))
+      }
+      assert(e.getMessage.contains("unknown table 'other'"), e.getMessage)
+    } finally spark.catalog.dropTempView("other")
+  }
+
   test("identifier matching is case-insensitive like spark.sql resolution") {
     val p = planner.plan(spark, twoSteps(
       "SELECT * FROM TEST",

@@ -70,16 +70,31 @@ class ServerSpec extends AnyFunSuite {
       assert(request(s"$base/explain", "POST", Some("""{"steps": []}"""))._1 == 400)
       assert(request(s"$base/explain", "GET", None)._1 == 405)
 
-      // concurrent identical queries share step names — per-request session
-      // cloning must keep their temp views from racing
+      // concurrent queries in the one shared session, over two different
+      // files under the same catalog name and the same step names: each
+      // must read its own file
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration._
       import scala.concurrent.ExecutionContext.Implicits.global
+      def countQuery(file: String) =
+        s"""{
+           |"steps": [
+           | {"sql": "SELECT count(*) AS cnt FROM t", "name": "m", "step_type": "HBee"},
+           | {"sql": "SELECT sum(cnt) AS total FROM m", "name": "r", "step_type": "HComb"}
+           |],
+           |"capacity": {"zones": 1},
+           |"catalogs": [{"name": "t", "type": "Static", "uri": "${TestSpark.sf}/$file"}]
+           |}""".stripMargin
+      val expected = Seq(query -> """[{"total":5}]""",
+        countQuery("region.parquet") -> """[{"total":5}]""",
+        countQuery("nation.parquet") -> """[{"total":25}]""")
       val results = Await.result(
-        Future.sequence(Seq.fill(4)(Future(request(s"$base/query", "POST", Some(query))))),
+        Future.sequence(Seq.fill(3)(expected).flatten.map { case (q, want) =>
+          Future((request(s"$base/query", "POST", Some(q)), want))
+        }),
         120.seconds)
-      results.foreach { case (st, b) =>
-        assert(st == 200 && b == """[{"total":5}]""", s"concurrent run broke: $st $b")
+      results.foreach { case ((st, b), want) =>
+        assert(st == 200 && b == want, s"concurrent run broke: $st $b, want $want")
       }
     } finally server.stop(0)
   }
