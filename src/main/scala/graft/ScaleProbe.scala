@@ -644,12 +644,11 @@ object ScaleProbe {
       // the host quiet when this started" on its own
       def timedSettled[A](body: => A): (A, Double) = { settle(); timed(body) }
       // the late pass (graph/text/ER) never touches Delta: drop the
-      // replay memo's SoftReference ballast (the 1e6-add probe state
-      // retains ~0.5 GB until LRU-evicted, and SoftReferences survive
-      // GC until heap pressure) so these rows measure the operators,
-      // not the cache's GC drag — and stay comparable to the pre-memo
-      // recordings
-      graft.sources.DeltaCatalog.invalidateReplayCache()
+      // metadata cache's soft ballast (the 1e6-add probe state retains
+      // ~0.5 GB until evicted, and soft values survive GC until heap
+      // pressure) so these rows measure the operators, not the cache's
+      // GC drag — and stay comparable to the pre-memo recordings
+      graft.sources.MetaCache.reset()
       graft.operators.Sinks.invalidateCommitParseCache()
       settle(120000L)
       val (_, lateCal) = timed(Calibration.job(spark))

@@ -96,8 +96,6 @@ final class BuzzEngine(
     import org.json4s.jackson.JsonMethods
     val query = BuzzQuery.fromJson(json)
     val p = plan(spark, query)
-    val filesTotal = p.catalog.files.size
-    val afterPartition = p.catalog.prune(spark, p.mapStep.partitionFilter).size
     val obj =
       ("catalog" ->
         ("name" -> p.catalog.name) ~
@@ -105,8 +103,8 @@ final class BuzzEngine(
         ("partition_columns" -> p.catalog.partitionColumns) ~
         ("schema" -> p.catalog.schema.toDDL)) ~
       ("files" ->
-        ("total" -> filesTotal) ~
-        ("after_partition_filter" -> afterPartition) ~
+        ("total" -> p.catalog.files.size) ~
+        ("after_partition_filter" -> p.filesAfterPartition) ~
         ("after_zone_pruning" -> p.files.size) ~
         ("bytes_to_read" -> p.files.map(_.length).sum)) ~
       ("map" ->

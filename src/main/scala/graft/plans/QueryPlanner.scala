@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.StructType
 import graft.model._
 import graft.sources.{SizedFile, SplittableCatalog}
 
-/** The validated distributed plan: which files the map stage reads, the two
+/** The validated distributed plan: which files the map stage reads (and
+  * how many survived partition pruning, before zone pruning), the two
   * steps and their parsed statements, and the derived output schemas.
   * Reference: `DistributedPlan` at
   * `/root/reference/code/src/services/fuse/query_planner.rs:17-44`. Spark
@@ -16,6 +17,7 @@ import graft.sources.{SizedFile, SplittableCatalog}
 final case class DistributedPlan(
     catalog: SplittableCatalog,
     files: Seq[SizedFile],
+    filesAfterPartition: Int,
     mapStep: BuzzStep,
     reduceStep: BuzzStep,
     map: Statement,
@@ -31,6 +33,7 @@ final case class DistributedPlan(
 final case class PrunedPlan(
     catalog: SplittableCatalog,
     files: Seq[SizedFile],
+    filesAfterPartition: Int,
     mapStep: BuzzStep,
     reduceStep: BuzzStep,
     map: Statement,
@@ -61,8 +64,8 @@ final class QueryPlanner(catalogs: Map[String, SplittableCatalog]) {
     val v = validateAndPrune(spark, query)
     val mapDf = v.map.bind(spark, LocalRelation(DataTypeUtils.toAttributes(v.catalog.fullSchema)))
     val reduceDf = v.reduce.bind(spark, mapDf.queryExecution.analyzed)
-    DistributedPlan(v.catalog, v.files, v.mapStep, v.reduceStep, v.map, v.reduce,
-      mapDf.schema, reduceDf.schema)
+    DistributedPlan(v.catalog, v.files, v.filesAfterPartition, v.mapStep, v.reduceStep,
+      v.map, v.reduce, mapDf.schema, reduceDf.schema)
   }
 
   /** Structural validation + file pruning — every plan-SHAPE error (step
@@ -123,7 +126,7 @@ final class QueryPlanner(catalogs: Map[String, SplittableCatalog]) {
         graft.sources.ZoneMap.pruneForPlan(
           spark, catalog.schema, pruned, map.plan, catalog.format)
       else pruned // csv/json carry no footer stats; nothing to prune by
-    PrunedPlan(catalog, files, mapStep, reduceStep, map, reduce)
+    PrunedPlan(catalog, files, pruned.size, mapStep, reduceStep, map, reduce)
   }
 
   /** The single base table a statement reads; rejects multi-source plans

@@ -6,13 +6,21 @@ import org.apache.spark.sql.types._
 
 import graft.model.BuzzException
 
-/** A file known to a catalog: path + byte length + partition values.
+/** A file known to a catalog: path + byte length + partition values, and
+  * the modification time that, with path and length, identifies the
+  * file's bytes for the metadata cache ([[MetaCache.FileId]]). Static
+  * catalogs take it from the listing's `FileStatus`, Delta catalogs from
+  * the add action; 0 where the lister does not know it (Delta files are
+  * never rewritten in place, so their path and length suffice).
   *
   * Reference: `SizedFile { key, length }` at
   * `/root/reference/code/src/models/mod.rs:13-16`; partition values are
   * always strings (`/root/reference/README.md:113`).
   */
-final case class SizedFile(key: String, length: Long, partitionValues: Seq[String])
+final case class SizedFile(
+    key: String, length: Long, partitionValues: Seq[String], modificationTime: Long = 0L) {
+  def id: MetaCache.FileId = MetaCache.FileId(key, length, modificationTime)
+}
 
 /** A catalog that can list its files as a queryable table and be split into
   * per-file scan units.
@@ -89,24 +97,25 @@ trait SplittableCatalog {
     partitionColumns.foldLeft(schema)((s, p) => s.add(p, StringType, nullable = false))
 
   /** The catalog's "table of files": one row per file with columns
-    * (key string, length long, <partition cols> string...).
-    * Reference: catalog/mod.rs:128-137. */
+    * (key string, length long, <partition cols> string...), as a local
+    * relation on the driver. Reference: catalog/mod.rs:128-137. */
   final def fileTable(spark: SparkSession): DataFrame = {
     val st = StructType(
       StructField("key", StringType, nullable = false) ::
       StructField("length", LongType, nullable = false) ::
       partitionColumns.map(p => StructField(p, StringType, nullable = false)).toList)
     val rows = files.map(f => Row.fromSeq(f.key +: f.length +: f.partitionValues))
-    spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), st)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), st)
   }
 
   /** Partition pruning: evaluate the user's SQL WHERE clause against the
     * file table and keep the surviving files.
     * Reference: `filter_catalog` runs `SELECT * FROM catalog WHERE <filter>`
     * over the file table (catalog/mod.rs:52-99). Implemented as a DataFrame
-    * filter so Catalyst handles the expression; the file list is driver-side
-    * metadata (as in Spark's own `PruneFileSourcePartitions`), so a collect
-    * here is O(#files), not O(data).
+    * filter so Catalyst handles the expression; the file table is a local
+    * relation (as the file list in Spark's own `PruneFileSourcePartitions`
+    * is driver-side metadata), so the optimizer evaluates the filter on
+    * the driver and no Spark job runs.
     */
   final def prune(spark: SparkSession, partitionFilter: Option[String]): Seq[SizedFile] =
     partitionFilter match {
@@ -321,12 +330,6 @@ trait SplittableCatalog {
     }
     bases.headOption.flatten.filter(b => bases.forall(_.contains(b)))
   }
-
-  /** One scan unit per file — parity with the reference's split
-    * (one file = one hbee, static_catalog.rs:95-107). Spark does its own
-    * file → task assignment; this exists for API parity and tests. */
-  final def split(spark: SparkSession, partitionFilter: Option[String]): Seq[SizedFile] =
-    prune(spark, partitionFilter)
 }
 
 /** Compiled-in static file list, parity with
@@ -357,21 +360,10 @@ final class StaticCatalog(
 }
 
 object StaticCatalog {
-  /** Driver-side cache of inferred (schema, nanosColumns) per first-file
-    * path. The reference reads one footer per catalog construction; callers
-    * that rebuild a catalog per query (the JSON API resolves catalogs at
-    * query time) would otherwise pay a footer read + Spark schema inference
-    * on every query — the measured bulk of the two-stage engine's overhead
-    * vs a direct Spark query. Parquet files are immutable in this model, so
-    * path-keyed caching is sound. */
-  private val inferenceCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (StructType, Seq[String], Seq[String])]()
-
-  /** Parquet columns physically stored as TIMESTAMP(NANOS) in the first
-    * file's footer — Spark's reader only surfaces these as longs, so the
-    * catalog converts them explicitly (see [[SplittableCatalog.read]]). */
   /** One footer read serving inference: the TIMESTAMP(NANOS) column names
-    * and the REQUIRED (non-nullable) column names. Spark's own inference
+    * (Spark's reader only surfaces these as longs, so the catalog converts
+    * them explicitly, see [[SplittableCatalog.read]]), the NTZ ones, and
+    * the REQUIRED (non-nullable) column names. Spark's own inference
     * widens every field to nullable, which would make an inferred catalog
     * over a REQUIRED column unverifiable under the strict (reference-
     * parity) nullability check — the footer's repetition is the truth. */
@@ -411,13 +403,36 @@ object StaticCatalog {
     (nanos, ntz, required)
   }
 
-  /** Catalog over explicit parquet paths, inferring the schema from the
-    * first file; file lengths come from the Hadoop FileSystem so `file://`,
-    * `hdfs://` and `s3a://` URIs all work. */
+  /** (schema, nanos columns, NTZ columns) of a parquet or ORC file. */
+  private def infer(
+      spark: SparkSession, format: String,
+      path: String): (StructType, Seq[String], Seq[String]) =
+    if (format == "orc") (spark.read.orc(path).schema, Nil, Nil) // self-describing footer
+    else {
+      // tolerate TIMESTAMP(NANOS) columns during inference (read as
+      // long), then re-declare them TimestampType backed by the
+      // catalog's conversion
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+      val (nanos, ntz, required) = footerMeta(spark, path)
+      val inferred = spark.read.parquet(path).schema
+      (StructType(inferred.fields.map { f0 =>
+        // Spark widens every inferred field to nullable; restore the
+        // footer's repetition so the inferred declaration round-trips
+        // through the strict nullability check (reference parity)
+        val f = f0.copy(nullable = !required.contains(f0.name))
+        if (nanos.contains(f.name) || ntz.contains(f.name))
+          f.copy(dataType = TimestampType)
+        else f
+      }), nanos, ntz)
+    }
+
   /** Formats a Static catalog can declare; parquet is the default and the
     * only one the reference's engine reads. */
   val SupportedFormats: Set[String] = Set("parquet", "orc", "csv", "json")
 
+  /** Catalog over explicit parquet paths, inferring the schema from the
+    * first file; file lengths and modification times come from the
+    * Hadoop FileSystem so `file://`, `hdfs://` and `s3a://` URIs all work. */
   def overLocalFiles(
       spark: SparkSession,
       name: String,
@@ -429,34 +444,22 @@ object StaticCatalog {
       readerOptions: Map[String, String] = Map.empty): StaticCatalog = {
     require(SupportedFormats.contains(format),
       s"unsupported catalog format '$format'")
+    lazy val files = paths.map { p =>
+      val st = FsUtil.status(spark, p)
+      SizedFile(p, st.getLen, partitionValues.getOrElse(p, Nil), st.getModificationTime)
+    }
     val (schema, nanosCols, ntzCols) = declaredSchema match {
       case Some(s) => (s, Nil: Seq[String], Nil: Seq[String])
       case None => format match {
-        case "parquet" =>
-          inferenceCache.computeIfAbsent(paths.head, { p =>
-            // tolerate TIMESTAMP(NANOS) columns during inference (read as
-            // long), then re-declare them TimestampType backed by the
-            // catalog's conversion
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            val (nanos, ntz, required) = footerMeta(spark, p)
-            val inferred = spark.read.parquet(p).schema
-            (StructType(inferred.fields.map { f0 =>
-              // Spark widens every inferred field to nullable; restore the
-              // footer's repetition so the inferred declaration round-trips
-              // through the strict nullability check (reference parity)
-              val f = f0.copy(nullable = !required.contains(f0.name))
-              if (nanos.contains(f.name) || ntz.contains(f.name))
-                f.copy(dataType = TimestampType)
-              else f
-            }), nanos, ntz)
-          })
-        case "orc" =>
-          // ORC is self-describing: footer-only schema read, cached like
-          // the parquet path (format-prefixed key — same path could hold
-          // either format across tests)
-          inferenceCache.computeIfAbsent(s"orc|${paths.head}", { _ =>
-            (spark.read.orc(paths.head).schema, Nil, Nil)
-          })
+        // the reference reads one footer per catalog construction; callers
+        // that rebuild a catalog per query (the JSON API resolves catalogs
+        // at query time) would otherwise pay a footer read + Spark schema
+        // inference on every query. Keyed by the first file's identity, so
+        // a file rewritten in place is inferred afresh.
+        case "parquet" | "orc" =>
+          MetaCache.getOrLoad(MetaCache.Inferred(format, files.head.id))(
+            infer(spark, format, files.head.key))(
+            v => 256L + 128L * v._1.length)
         case other =>
           // inferring csv/json schemas requires a DATA scan, which catalog
           // resolution must never pay at any scale — require a declaration
@@ -464,9 +467,6 @@ object StaticCatalog {
             s"$other catalog '$name' requires a declared schema " +
               "(\"schema\": \"col TYPE, ...\") — schema inference would scan the data")
       }
-    }
-    val files = paths.map { p =>
-      SizedFile(p, FsUtil.status(spark, p).getLen, partitionValues.getOrElse(p, Nil))
     }
     new StaticCatalog(
       name, schema, partitionColumns, files, nanosCols, ntzCols, format, readerOptions)

@@ -13,16 +13,6 @@ import graft.model.{BuzzCatalogRef, BuzzException}
   * same resolution step, without the hardcoded example registry. */
 object CatalogResolver {
 
-  /** Parsed-DDL memo: `StructType.fromDDL` pays a parser warm-up on first
-    * use and a full parse per call; catalogs re-resolve per query (the
-    * reference re-configures per request too), so the same schema string
-    * parses once per process instead of once per query. Failures are not
-    * cached — invalid DDL re-throws on every call. Bounded by the number
-    * of distinct schema strings a process ever sees (catalog-count-sized,
-    * not data-sized). */
-  private val ddlCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
   def resolve(
       spark: SparkSession,
       refs: Seq[BuzzCatalogRef]): Map[String, SplittableCatalog] =
@@ -40,8 +30,13 @@ object CatalogResolver {
             throw new BuzzException.BadRequest(
               s"unknown format '$format' for catalog '${r.name}' " +
                 s"(expected one of ${StaticCatalog.SupportedFormats.toSeq.sorted.mkString(", ")})")
+          // `StructType.fromDDL` pays a full parse per call and catalogs
+          // re-resolve per query (the reference re-configures per request
+          // too), so a schema string parses once while the cache holds it;
+          // invalid DDL caches nothing and re-throws on every call
           val declared = r.schemaDdl.map { ddl =>
-            try ddlCache.computeIfAbsent(ddl, org.apache.spark.sql.types.StructType.fromDDL)
+            try MetaCache.getOrLoad(MetaCache.Ddl(ddl))(
+              org.apache.spark.sql.types.StructType.fromDDL(ddl))(_ => 16L * ddl.length)
             catch {
               case e: Exception => throw new BuzzException.BadRequest(
                 s"invalid schema DDL for catalog '${r.name}': ${e.getMessage}")

@@ -46,6 +46,9 @@ object DeltaCatalog {
     // path -> the add action's full deletion-vector descriptor —
     // merge-on-read row-level deletes; lockstep with `live` like stats
     val dvs = scala.collection.mutable.HashMap[String, DvDescriptor]()
+    // path -> the add action's modificationTime (the file's identity in
+    // the metadata cache); lockstep with `live` like stats
+    val mtimes = scala.collection.mutable.HashMap[String, Long]()
     // table configuration from the latest metaData action — carries the
     // writer-side obligations (delta.appendOnly, delta.constraints.*)
     var configuration: Map[String, String] = Map.empty
@@ -63,6 +66,13 @@ object DeltaCatalog {
     // readerFeatures, writerFeatures) — checkpoint writers must persist
     // it or commit cleaning would silently revert a feature bump
     var protocol: Option[(Long, Long, Seq[String], Seq[String])] = None
+
+    /** Estimated retained bytes, dominated by the live entries' paths
+      * and stats strings. */
+    def weight: Long =
+      live.iterator.map { case (p, (_, pv)) => 200L + 4L * p.length + 100L * pv.size }.sum +
+        stats.valuesIterator.map(64L + 2L * _.length).sum +
+        200L * (dvs.size + tombstones.size + txns.size)
   }
 
   /** Highest committed SetTransaction version for `appId`, or None if the
@@ -72,14 +82,6 @@ object DeltaCatalog {
     * by asking this before committing. */
   def lastTxnVersion(spark: SparkSession, tablePath: String, appId: String): Option[Long] =
     replay(spark, tablePath, None).txns.get(appId)
-
-  /** Every app's highest committed txn version at `versionAsOf` (None =
-    * head) — what a checkpoint writer must persist so idempotence
-    * survives commit cleaning. */
-  private[graft] def allTxns(
-      spark: SparkSession, tablePath: String,
-      versionAsOf: Option[Long] = None): Map[String, Long] =
-    replay(spark, tablePath, versionAsOf).txns.toMap
 
   /** Each live file's `add.stats` JSON keyed by RAW log path, at
     * `versionAsOf` (None = head) — what a checkpoint writer must persist
@@ -248,6 +250,12 @@ object DeltaCatalog {
       versionAsOf: Option[Long]): Map[String, (Long, Map[String, String])] =
     replay(spark, tablePath, versionAsOf).live.toMap
 
+  /** Count of UNCACHED (full) replays — the seam the one-replay-per-write
+    * specs count against. Monotonic; test-only reader. */
+  @volatile private[graft] var uncachedReplays: Long = 0L
+
+  private val CheckpointFile = """(\d{20})\.checkpoint(\.\d{10}\.\d{10})?\.parquet""".r
+
   /** Replay the log into a [[State]]: checkpoint seed (if usable for the
     * target version) + the JSON commit tail, strictly contiguous.
     *
@@ -258,7 +266,7 @@ object DeltaCatalog {
     * Retention at 10^6 is ~430 MB for the State alone and ~700 MB while
     * BOTH the memo's cached State and a live catalog's derived file list
     * are reachable (the r11-measured 735 MB row) — the memo's price for
-    * never re-replaying; SoftReferences yield it under heap pressure. The
+    * never re-replaying; soft cache values yield it under heap pressure. The
     * checkpoint read is projected to the four consumed action columns
     * (metaData/add/txn/protocol), so a foreign checkpoint's expired
     * remove tombstones never reach the driver. This driver-resident shape
@@ -267,39 +275,20 @@ object DeltaCatalog {
     * manifest join, not a bigger driver.
     *
     * MEMOIZED: a Delta snapshot is immutable per (table, version), so the
-    * replayed state is cached keyed by (tablePath, resolved version,
-    * log-listing fingerprint). The fingerprint — every log file's (name,
-    * size, mtime) — makes any out-of-band change to the log directory
-    * (a cleaned commit, a test rewriting a commit body in place, a table
-    * re-created at the same path) a cache MISS instead of stale state;
-    * protocol-conformant writers only ever ADD log files, which changes
-    * the head resolution and fingerprint together. `versionAsOf = None`
-    * resolves to the listing's head version BEFORE keying, so a writer
-    * that pinned `fromDeltaLog(versionAsOf = Some(head))` and then gates
-    * through `assertWriterProtocol` (head) pays ONE replay, not two —
-    * the redundancy that doubled every Delta write's driver stall at the
-    * measured 10^6-add bound. Values are SoftReferences: a 10^6-add state
-    * retains ~430 MB, and the cache must yield to heap pressure rather
-    * than hold it. */
-  private final case class ReplayKey(tablePath: String, version: Long, fingerprint: Long)
-  private val replayCacheMax = 8
-  private val replayCache =
-    new java.util.LinkedHashMap[ReplayKey, java.lang.ref.SoftReference[State]](
-      16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[ReplayKey, java.lang.ref.SoftReference[State]]): Boolean =
-        size > replayCacheMax
-    }
-  /** Count of UNCACHED (full) replays — the seam the one-replay-per-write
-    * specs count against. Monotonic; test-only reader. */
-  @volatile private[graft] var uncachedReplays: Long = 0L
-  /** Test seam: drop every memoized replay (e.g. before measuring a cold
-    * replay, or after deliberately corrupting a log in place). */
-  private[graft] def invalidateReplayCache(): Unit =
-    replayCache.synchronized(replayCache.clear())
-
-  private val CheckpointFile = """(\d{20})\.checkpoint(\.\d{10}\.\d{10})?\.parquet""".r
-
+    * replayed state is cached in [[MetaCache]] keyed by (tablePath,
+    * resolved version, log-listing fingerprint). The fingerprint — every
+    * log file's (name, size, mtime) — makes any out-of-band change to the
+    * log directory (a cleaned commit, a test rewriting a commit body in
+    * place, a table re-created at the same path) a cache MISS instead of
+    * stale state; protocol-conformant writers only ever ADD log files,
+    * which changes the head resolution and fingerprint together.
+    * `versionAsOf = None` resolves to the listing's head version BEFORE
+    * keying, so a writer that pinned `fromDeltaLog(versionAsOf =
+    * Some(head))` and then gates through `assertWriterProtocol` (head)
+    * pays ONE replay, not two — the redundancy that doubled every Delta
+    * write's driver stall at the measured 10^6-add bound. The cache's
+    * values are soft: a 10^6-add state retains ~430 MB and yields to heap
+    * pressure rather than hold it. */
   private def replay(
       spark: SparkSession,
       tablePath: String,
@@ -323,23 +312,18 @@ object DeltaCatalog {
       case CheckpointFile(v, _) => Some(v.toLong)
       case _                    => None
     }) :+ -1L).max
-    val key = ReplayKey(tablePath, versionAsOf.getOrElse(headInListing), fp)
-    replayCache.synchronized(Option(replayCache.get(key)).flatMap(r => Option(r.get()))) match {
-      case Some(cached) => cached
-      case None =>
-        // replay at the version RESOLVED FROM THIS LISTING, never at an
-        // unpinned head: replayUncached re-lists the directory, and a
-        // commit landing between the two listings would otherwise cache a
-        // state one version AHEAD of its (version, fingerprint) key
-        val pinned = versionAsOf.orElse(
-          if (headInListing >= 0) Some(headInListing) else None)
-        val state = replayUncached(spark, tablePath, pinned, logDir)
-        replayCache.synchronized {
-          uncachedReplays += 1
-          replayCache.put(key, new java.lang.ref.SoftReference(state))
-        }
-        state
-    }
+    val key = MetaCache.Snapshot(tablePath, versionAsOf.getOrElse(headInListing), fp)
+    MetaCache.getOrLoad(key) {
+      // replay at the version RESOLVED FROM THIS LISTING, never at an
+      // unpinned head: replayUncached re-lists the directory, and a
+      // commit landing between the two listings would otherwise cache a
+      // state one version AHEAD of its (version, fingerprint) key
+      val pinned = versionAsOf.orElse(
+        if (headInListing >= 0) Some(headInListing) else None)
+      val state = replayUncached(spark, tablePath, pinned, logDir)
+      synchronized(uncachedReplays += 1)
+      state
+    }(_.weight)
   }
 
   private def replayUncached(
@@ -416,17 +400,6 @@ object DeltaCatalog {
   /** The `_last_checkpoint` version, or -1 when there is none. */
   private def checkpointVersion(spark: SparkSession, logDir: String): Long =
     checkpointMeta(spark, logDir).map(_._1).getOrElse(-1L)
-
-  /** The tombstone retention the table's current checkpoint was written
-    * with (`tombstoneRetainMs` in `_last_checkpoint` — this engine's
-    * extension field; foreign checkpoints lack it). None when there is no
-    * checkpoint or the field is absent. Vacuum validates its window
-    * against this: tombstones older than it were EXPIRED from the
-    * checkpoint and date by file mtime, which is only conservative for
-    * windows no longer than the retention. */
-  private[graft] def checkpointTombstoneRetention(
-      spark: SparkSession, logDir: String): Option[Long] =
-    lastCheckpointLong(spark, logDir, "tombstoneRetainMs")
 
   /** The tombstone EXPIRY WATERMARK (`tombstoneFloor` in
     * `_last_checkpoint`): the minimum over checkpoint history of
@@ -524,6 +497,9 @@ object DeltaCatalog {
           .getOrElse(Map.empty[String, String])
         if (path != null && path.nonEmpty) {
           state.live(path) = (size, pv)
+          if (a.schema.fieldNames.contains("modificationTime") &&
+              !a.isNullAt(a.fieldIndex("modificationTime")))
+            state.mtimes(path) = a.getAs[Number]("modificationTime").longValue
           // pre-stats checkpoints have no `stats` column — tolerated
           if (a.schema != null && a.schema.fieldNames.contains("stats")) {
             val s = a.getAs[String]("stats")
@@ -886,6 +862,11 @@ object DeltaCatalog {
             case Some(d) => state.dvs(path) = d
             case None    => state.dvs.remove(path)
           }
+          add \ "modificationTime" match {
+            case JInt(t)  => state.mtimes(path) = t.toLong
+            case JLong(t) => state.mtimes(path) = t
+            case _        => state.mtimes.remove(path)
+          }
         }
     }
     v \ "remove" match {
@@ -894,6 +875,7 @@ object DeltaCatalog {
         rm \ "path" match {
           case JString(p) =>
             state.live.remove(p); state.stats.remove(p); state.dvs.remove(p)
+            state.mtimes.remove(p)
             val ts: Option[Long] = rm \ "deletionTimestamp" match {
               case JInt(t)  => Some(t.toLong)
               case JLong(t) => Some(t)
@@ -934,9 +916,10 @@ object DeltaCatalog {
       SizedFile(
         new Path(tablePath, decodePath(path)).toString,
         size,
-        state.partitionCols.map(c => pv.getOrElse(c, "")))
+        state.partitionCols.map(c => pv.getOrElse(c, "")),
+        state.mtimes.getOrElse(path, 0L))
     }
-    seedZoneCache(tablePath, dataSchema, state)
+    seedZoneCache(dataSchema, state, files)
     // deletion vectors, keyed by the same absolute key `files` carries,
     // resolved against the table root ("u" descriptors derive their file)
     val dvByKey = state.dvs.toMap.map { case (raw, d) =>
@@ -952,13 +935,14 @@ object DeltaCatalog {
   /** Data skipping from the LOG: seed the zone-map pruning cache from each
     * live file's `add.stats` ranges, so a range predicate in a two-stage
     * query prunes a Delta file list with ZERO footer reads — the stats
-    * already rode the replay this catalog was built from. Numeric columns
-    * only (the range shapes [[ZoneMap.pruneForQuery]] harvests); a column
-    * absent from a file's stats stays unseeded and falls back to its
-    * footer on demand. Malformed stats are ignored — skipping is an
-    * optimization, never a read blocker. */
+    * already rode the replay this catalog was built from. One entry per
+    * file identity holds every numeric column's range (the range shapes
+    * [[ZoneMap.pruneForQuery]] harvests); stats are parsed only for
+    * identities the cache does not hold yet. A column absent from a
+    * file's stats falls back to its footer on demand. Malformed stats are
+    * ignored — skipping is an optimization, never a read blocker. */
   private def seedZoneCache(
-      tablePath: String, dataSchema: StructType, state: State): Unit = {
+      dataSchema: StructType, state: State, files: Seq[SizedFile]): Unit = {
     import org.apache.spark.sql.types._
     if (state.stats.isEmpty) return
     // cache + stats are keyed by PHYSICAL names — what the files (and the
@@ -975,24 +959,20 @@ object DeltaCatalog {
       case JDecimal(d) => Some(d.toDouble)
       case _           => None
     }
-    state.live.keys.foreach { raw =>
-      state.stats.get(raw).foreach { json =>
-        val key = new Path(tablePath, decodePath(raw)).toString
-        // one representative probe avoids re-parsing on every catalog
-        // rebuild of the same process (appends revalidate per commit)
-        if (!ZoneMap.isSeeded(key, numeric.head)) {
-          try {
-            val parsed = JsonMethods.parse(json)
-            val mins = parsed \ "minValues"
-            val maxs = parsed \ "maxValues"
-            numeric.foreach { c =>
-              num(mins \ c).zip(num(maxs \ c)).foreach { case (mn, mx) =>
-                ZoneMap.seedEntry(key, c, Some(mn), Some(mx))
-              }
-            }
-          } catch { case scala.util.control.NonFatal(_) => }
-        }
-      }
+    // `files` follows `live`'s order, so the raw path zips back in
+    val withStats = state.live.keys.zip(files).flatMap { case (raw, f) =>
+      state.stats.get(raw).map(f.id -> _)
+    }.toMap
+    val seeded = MetaCache.present[MetaCache.Zones, AnyRef](
+      withStats.keys.map(MetaCache.Zones(_))).keySet.map(_.file)
+    (withStats -- seeded).foreach { case (id, json) =>
+      try {
+        val parsed = JsonMethods.parse(json)
+        ZoneMap.seedZones(id, numeric.flatMap { c =>
+          num(parsed \ "minValues" \ c).zip(num(parsed \ "maxValues" \ c))
+            .map { case (mn, mx) => c -> (Some(mn), Some(mx)) }
+        }.toMap)
+      } catch { case scala.util.control.NonFatal(_) => }
     }
   }
 

@@ -26,17 +26,15 @@ import graft.model.BuzzException
   */
 object SchemaVerifier {
 
-  /** Verified-file memo: a (format, path, length, mtime, declared-DDL,
-    * flag) tuple that PASSED verification never re-reads its footer this
-    * process — the check is a pure function of the file bytes and the
-    * declaration, and the engine re-verifies per query (a fresh cold-path
-    * engine rep paid one footer read per file per run; the fingerprint
-    * stat is ~10× cheaper than footer open+parse and is the same identity
-    * discipline the Delta replay memo uses). Failures are never cached — a
-    * mismatch re-throws with its full message on every call. Entries are a
-    * few hundred bytes; the cap just bounds a pathological many-files
-    * process. The format leg keeps a path verified as ORC from ever
-    * skipping the stricter parquet check (and vice versa).
+  /** Verified-file memo: a file that PASSED verification against a
+    * declaration is not re-read while [[MetaCache]] holds its (format,
+    * path, length, mtime, declared DDL, flag) key — the check is a pure
+    * function of the file bytes and the declaration, and the engine
+    * re-verifies per query (the fingerprint stat is ~10× cheaper than a
+    * footer open+parse). Failures are never cached — a mismatch re-throws
+    * with its full message on every call. The format leg keeps a path
+    * verified as ORC from ever skipping the stricter parquet check (and
+    * vice versa).
     *
     * The (length, mtime) identity is only trustworthy where mtime is
     * fine-grained and monotone — a file REWRITTEN IN PLACE with the same
@@ -46,10 +44,6 @@ object SchemaVerifier {
     * (fine-grained mtime; also the bench/engine path the memo was built
     * for), OFF elsewhere unless the Hadoop conf sets
     * `graft.schemaVerifier.memo=on` (`off` force-disables everywhere). */
-  private val verifiedCache =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String, Long, Long, String, Boolean)]()
-  private val verifiedCacheMax = 100000
-
   private def memoEnabled(p: Path, conf: Configuration): Boolean =
     conf.get("graft.schemaVerifier.memo", "auto") match {
       case "on"  => true
@@ -61,19 +55,19 @@ object SchemaVerifier {
         }
     }
 
-  private def fingerprint(
-      format: String, p: String, conf: Configuration,
-      declared: StructType, flag: Boolean): (String, String, Long, Long, String, Boolean) = {
-    val st = new Path(p).getFileSystem(conf).getFileStatus(new Path(p))
-    (format, p, st.getLen, st.getModificationTime, declared.toDDL, flag)
-  }
-
-  private def cached(key: (String, String, Long, Long, String, Boolean)): Boolean =
-    verifiedCache.contains(key)
-
-  private def record(key: (String, String, Long, Long, String, Boolean)): Unit = {
-    if (verifiedCache.size > verifiedCacheMax) verifiedCache.clear()
-    verifiedCache.add(key)
+  private def verifyEach(
+      format: String, paths: Seq[String], declared: StructType,
+      conf: Configuration, missingNullableOk: Boolean)(check: String => Unit): Unit = {
+    lazy val ddl = declared.toDDL
+    paths.foreach { p =>
+      if (!memoEnabled(new Path(p), conf)) check(p)
+      else {
+        val st = new Path(p).getFileSystem(conf).getFileStatus(new Path(p))
+        val key = MetaCache.Verified(format,
+          MetaCache.FileId(p, st.getLen, st.getModificationTime), ddl, missingNullableOk)
+        MetaCache.getOrLoad(key) { check(p); key }(_ => 2L * (p.length + ddl.length))
+      }
+    }
   }
 
   /** Pass the session's Hadoop conf (`spark.sessionState.newHadoopConf()`)
@@ -84,17 +78,9 @@ object SchemaVerifier {
       paths: Seq[String],
       declared: StructType,
       conf: Configuration = new Configuration(),
-      missingNullableOk: Boolean = false): Unit = {
-    paths.foreach { p =>
-      if (memoEnabled(new Path(p), conf)) {
-        val key = fingerprint("parquet", p, conf, declared, missingNullableOk)
-        if (!cached(key)) {
-          verifyOne(p, declared, conf, missingNullableOk)
-          record(key)
-        }
-      } else verifyOne(p, declared, conf, missingNullableOk)
-    }
-  }
+      missingNullableOk: Boolean = false): Unit =
+    verifyEach("parquet", paths, declared, conf, missingNullableOk)(
+      verifyOne(_, declared, conf, missingNullableOk))
 
   private def verifyOne(
       p: String,
@@ -136,10 +122,6 @@ object SchemaVerifier {
     }
   }
 
-  /** Test seam: drop the verified-file memo (e.g. before asserting a
-    * mismatch on a file rewritten in place within one mtime tick). */
-  private[graft] def invalidateCache(): Unit = verifiedCache.clear()
-
   /** ORC twin of [[verify]]: every declared column must exist in each
     * file's footer TypeDescription with a compatible category. ORC's
     * schema carries no per-field repetition, so there is no nullability
@@ -176,18 +158,7 @@ object SchemaVerifier {
         }
       }
     }
-    paths.foreach { p =>
-      // same verified-file memo as [[verify]], keyed under the "orc"
-      // format leg so a path can never satisfy the parquet check with an
-      // ORC verification (or vice versa)
-      if (memoEnabled(new Path(p), conf)) {
-        val key = fingerprint("orc", p, conf, declared, missingNullableOk)
-        if (!cached(key)) {
-          verifyOneOrc(p)
-          record(key)
-        }
-      } else verifyOneOrc(p)
-    }
+    verifyEach("orc", paths, declared, conf, missingNullableOk)(verifyOneOrc)
   }
 
   private def orcCompatible(

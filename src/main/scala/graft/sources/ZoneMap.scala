@@ -1,7 +1,11 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.sources.MetaCache.{FileId, SidecarProbed, Zones}
 
 /** File-level zone maps (data skipping): a per-file (rows, min, max,
   * null_count) manifest for one column, read from parquet FOOTERS — no data
@@ -13,146 +17,169 @@ import org.apache.spark.sql.functions._
   * ranges, so range predicates prune FILES the way partition filters prune
   * directories).
   *
-  * 100 TB shape: the manifest build distributes footer reads across the
-  * cluster (one task per file batch — a 10⁶-file lake reads 10⁶ footers in
-  * parallel, ~KB each, never a data page); the manifest itself is
+  * 100 TB shape: past Spark's listing threshold the manifest build
+  * distributes footer reads across the cluster (one task per file batch —
+  * a 10⁶-file lake reads 10⁶ footers in parallel, ~KB each, never a data
+  * page); the manifest itself is
   * files-sized, the same cardinality the catalog already carries. Pruning
   * collects only the surviving path strings (manifest-bounded driver
   * traffic). Missing or unreadable stats KEEP the file — skipping is an
   * optimization and must never be a correctness bet. */
 object ZoneMap {
 
-  /** Distributed footer-stats manifest for `column` over `paths`: one row
-    * per file — (file, rows, min, max, null_count), min/max as doubles
-    * (exact for integer values < 2⁵³; a file whose chunk statistics are
-    * absent yields NULL min/max and is never pruned; null_count is NULL
-    * when any chunk leaves its null count unset). Supports INT32 /
-    * INT64 / FLOAT / DOUBLE physical chunks — the numeric-range predicates
-    * zone maps serve. */
+  /** Footer-stats manifest for `column` over `paths`: one row per file —
+    * (file, rows, min, max, null_count), min/max as doubles (exact for
+    * integer values < 2⁵³; a file whose chunk statistics are absent yields
+    * NULL min/max and is never pruned; null_count is NULL when any chunk
+    * leaves its null count unset). Supports INT32 / INT64 / FLOAT /
+    * DOUBLE physical chunks — the numeric-range predicates zone maps
+    * serve. Footers are read per [[readEach]]'s local/distributed rule. */
   def fileStats(spark: SparkSession, paths: Seq[String], column: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    // Hadoop Configuration is not serializable — ship its entries and
-    // rebuild on the executor (defaults + session overlay)
-    val confProps = spark.sessionState.newHadoopConf().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    val parallelism = math.min(paths.size, spark.sparkContext.defaultParallelism).max(1)
-    val rows = spark.sparkContext
-      .parallelize(paths, parallelism)
-      .map { p =>
-        try {
-        val conf = new org.apache.hadoop.conf.Configuration(true)
-        confProps.foreach { case (k, v) => conf.set(k, v) }
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(p), conf))
-        val footer = try reader.getFooter finally reader.close()
-        var rows = 0L; var nulls = 0L
-        // parquet-mr Statistics.getNumNulls returns -1 when unset —
-        // accumulating that would drive the manifest's null_count negative,
-        // so an unset chunk makes the FILE's null_count unknown (NULL)
-        var nullsKnown = true
-        var mn = Option.empty[Double]; var mx = Option.empty[Double]
-        var statsComplete = true
-        footer.getBlocks.asScala.foreach { block =>
-          rows += block.getRowCount
-          block.getColumns.asScala
-            .filter(_.getPath.toDotString == column)
-            .foreach { chunk =>
-              val st = chunk.getStatistics
-              if (st == null || st.isEmpty) statsComplete = false
-              else {
-                if (st.isNumNullsSet) nulls += st.getNumNulls
-                else nullsKnown = false
-                if (st.hasNonNullValue) {
-                  def num(v: AnyRef): Double = v match {
-                    case i: java.lang.Integer => i.toDouble
-                    case l: java.lang.Long    => l.toDouble
-                    case f: java.lang.Float   => f.toDouble
-                    case d: java.lang.Double  => d
-                    case _ => statsComplete = false; Double.NaN
-                  }
-                  val lo = num(st.genericGetMin.asInstanceOf[AnyRef])
-                  val hi = num(st.genericGetMax.asInstanceOf[AnyRef])
-                  if (!lo.isNaN && !hi.isNaN) {
-                    mn = Some(mn.fold(lo)(math.min(_, lo)))
-                    mx = Some(mx.fold(hi)(math.max(_, hi)))
-                  }
-                } // an all-null chunk contributes no range but stays complete
-              }
-            }
-        }
-        val (fmn, fmx) =
-          if (statsComplete) (mn, mx) else (None, None) // conservative: unknown range
-        (p, rows, fmn, fmx, if (nullsKnown) Some(nulls) else None)
-        } catch {
-          // pruning is an OPTIMIZATION: a missing or unreadable footer
-          // yields an unknown-stats row (never pruned) instead of failing
-          // the manifest build — the subsequent read surfaces any real
-          // missing-file error loudly, and planner-validation catalogs
-          // with synthetic paths keep planning
-          case scala.util.control.NonFatal(_) =>
-            (p, 0L, Option.empty[Double], Option.empty[Double],
-              Option.empty[Long])
-        }
-      }
-    spark.createDataFrame(rows)
-      .toDF("file", "rows", "min", "max", "null_count")
+    val rows = readEach(spark, paths)(parquetFooter).map { case (p, footer) =>
+      val (mn, mx) = footer.fold(Unknown)(_.range(column))
+      (p, footer.fold(0L)(_.rows), mn, mx, footer.flatMap(_.columns.get(column)).flatMap(_.nulls))
+    }
+    spark.createDataFrame(rows).toDF("file", "rows", "min", "max", "null_count")
   }
 
-  /** ORC twin of [[fileStats]]: per-file (rows, min, max, null_count) for
-    * one top-level column from ORC footer statistics — same manifest
-    * shape, same conservatism (unreadable footer / unsupported type /
-    * valueless stats ⇒ unknown range, never pruned). ORC's
-    * ColumnStatistics.getNumberOfValues counts NON-null values, so the
-    * file's null count is rows − values — always known when stats are. */
-  def orcFileStats(spark: SparkSession, paths: Seq[String], column: String): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val confProps = spark.sessionState.newHadoopConf().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    val parallelism = math.min(paths.size, spark.sparkContext.defaultParallelism).max(1)
-    val rows = spark.sparkContext
-      .parallelize(paths, parallelism)
-      .map { p =>
-        try {
-          val conf = new org.apache.hadoop.conf.Configuration(true)
-          confProps.foreach { case (k, v) => conf.set(k, v) }
-          val reader = org.apache.orc.OrcFile.createReader(
-            new org.apache.hadoop.fs.Path(p),
-            org.apache.orc.OrcFile.readerOptions(conf))
-          try {
-            val schema = reader.getSchema
-            val names = schema.getFieldNames.asScala
-            // exact-name match, same as the parquet manifest's dot-string
-            // compare: two footer columns differing only by case must
-            // never alias each other into a WRONG range (a casing
-            // mismatch just yields unknown stats — never pruned)
-            val idx = names.indexOf(column)
-            val nRows = reader.getNumberOfRows
-            if (idx < 0) (p, nRows, Option.empty[Double], Option.empty[Double], Option.empty[Long])
-            else {
-              val colId = schema.getChildren.get(idx).getId
-              val st = reader.getStatistics()(colId)
-              val nulls = Some(nRows - st.getNumberOfValues)
-              val range: (Option[Double], Option[Double]) =
-                if (st.getNumberOfValues == 0L) (None, None)
-                else st match {
-                  case i: org.apache.orc.IntegerColumnStatistics =>
-                    (Some(i.getMinimum.toDouble), Some(i.getMaximum.toDouble))
-                  case d: org.apache.orc.DoubleColumnStatistics =>
-                    (Some(d.getMinimum), Some(d.getMaximum))
-                  case _ => (None, None) // strings/decimals/timestamps: not served
-                }
-              (p, nRows, range._1, range._2, nulls)
+  /** Runs `read` once per path — on the driver for at most
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` paths,
+    * otherwise in one job of up to `defaultParallelism` tasks. This is
+    * the rule Spark applies to file listing: below the threshold a job's
+    * scheduling costs more than the reads, above it the reads (a 10⁶-file
+    * lake's footers, ~KB each) spread across the cluster. The Hadoop conf
+    * (`spark.hadoop.*` credentials and endpoints included) travels as its
+    * entries, since `Configuration` is not serializable. */
+  private def readEach[T](spark: SparkSession, paths: Seq[String])(
+      read: (Configuration, String) => T): Seq[(String, T)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    if (paths.size <= spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
+      paths.map(p => p -> read(conf, p))
+    else {
+      import scala.jdk.CollectionConverters._
+      val props = conf.asScala.map(e => e.getKey -> e.getValue).toMap
+      val parallelism = math.min(paths.size, spark.sparkContext.defaultParallelism)
+      spark.sparkContext.parallelize(paths, parallelism).mapPartitions { it =>
+        val c = new Configuration(true)
+        props.foreach { case (k, v) => c.set(k, v) }
+        it.map(p => p -> read(c, p))
+      }.collect().toSeq
+    }
+  }
+
+  /** One file's footer statistics: its row count and, per column, the
+    * bounds over every row group — a Long for integral chunks, a Double
+    * for floating ones, a String for UTF-8 binary — and the null count.
+    * `complete` is false when any chunk leaves its statistics unset or a
+    * bound unserved; min/max are then None. nulls is None when any chunk
+    * leaves its count unset. */
+  private final case class ColumnStats(
+      complete: Boolean, min: Option[Any], max: Option[Any], nulls: Option[Long])
+  private final case class FooterStats(rows: Long, columns: Map[String, ColumnStats]) {
+    /** `column`'s numeric (min, max) as doubles (exact below 2⁵³). */
+    def range(column: String): Range = columns.get(column).fold(Unknown) { s =>
+      def num(v: Option[Any]): Option[Double] = v.collect {
+        case l: Long   => l.toDouble
+        case d: Double => d
+      }
+      (num(s.min), num(s.max))
+    }
+  }
+
+  /** A parquet footer's [[FooterStats]] keyed by dotted column path; None
+    * when the footer is missing or unreadable — pruning is an
+    * OPTIMIZATION, so such a file gets unknown stats (never pruned) and
+    * the read itself surfaces any real missing-file error loudly. */
+  private def parquetFooter(conf: Configuration, path: String): Option[FooterStats] =
+    try {
+      import scala.jdk.CollectionConverters._
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new Path(path), conf))
+      val footer = try reader.getFooter finally reader.close()
+      final class Acc {
+        var complete = true
+        // parquet-mr Statistics.getNumNulls returns -1 when unset —
+        // accumulating that would drive the count negative, so an unset
+        // chunk makes the file's null count unknown
+        var nullsKnown = true
+        var nulls = 0L
+        var mn = Option.empty[Any]; var mx = Option.empty[Any]
+      }
+      // a string bound is only served when Java string comparison agrees
+      // with the footer's byte order: BMP text without surrogates, of
+      // bounded length (parquet truncation of long binary stats would
+      // make a recorded "max" a PREFIX — not an upper bound)
+      def bound(v: Any): Option[Any] = v match {
+        case i: java.lang.Integer => Some(i.longValue)
+        case l: java.lang.Long    => Some(l.longValue)
+        case f: java.lang.Float   => Some(f.doubleValue).filterNot(_.isNaN)
+        case d: java.lang.Double  => Some(d.doubleValue).filterNot(_.isNaN)
+        case b: org.apache.parquet.io.api.Binary =>
+          Some(b.toStringUsingUTF8).filter(s => s.length <= 64 && !s.exists(Character.isSurrogate))
+        case _ => None
+      }
+      def less(a: Any, b: Any): Boolean = (a, b) match {
+        case (x: Long, y: Long)     => x < y
+        case (x: Double, y: Double) => x < y
+        case (x: String, y: String) => x < y
+        case _                      => false
+      }
+      val accs = scala.collection.mutable.LinkedHashMap[String, Acc]()
+      var rows = 0L
+      footer.getBlocks.asScala.foreach { block =>
+        rows += block.getRowCount
+        block.getColumns.asScala.foreach { chunk =>
+          val a = accs.getOrElseUpdate(chunk.getPath.toDotString, new Acc)
+          val st: org.apache.parquet.column.statistics.Statistics[_] = chunk.getStatistics
+          if (st == null || st.isEmpty) a.complete = false
+          else {
+            if (st.isNumNullsSet) a.nulls += st.getNumNulls else a.nullsKnown = false
+            // an all-null chunk contributes no range but stays complete
+            if (st.hasNonNullValue) (bound(st.genericGetMin), bound(st.genericGetMax)) match {
+              case (Some(lo), Some(hi)) =>
+                a.mn = Some(a.mn.fold(lo)(m => if (less(lo, m)) lo else m))
+                a.mx = Some(a.mx.fold(hi)(m => if (less(m, hi)) hi else m))
+              case _ => a.complete = false
             }
-          } finally reader.close()
-        } catch {
-          case scala.util.control.NonFatal(_) =>
-            (p, 0L, Option.empty[Double], Option.empty[Double], Option.empty[Long])
+          }
         }
       }
-    spark.createDataFrame(rows)
-      .toDF("file", "rows", "min", "max", "null_count")
-  }
+      Some(FooterStats(rows, accs.map { case (c, a) =>
+        c -> ColumnStats(a.complete, a.mn.filter(_ => a.complete),
+          a.mx.filter(_ => a.complete), if (a.nullsKnown) Some(a.nulls) else None)
+      }.toMap))
+    } catch { case scala.util.control.NonFatal(_) => None }
+
+  /** ORC twin of [[parquetFooter]] over the top-level fields. Field names
+    * match exactly, as parquet's dotted paths do: two columns differing
+    * only by case never alias each other into a WRONG range. ORC's
+    * getNumberOfValues counts NON-null values, so a column's null count
+    * is rows − values. */
+  private def orcFooter(conf: Configuration, path: String): Option[FooterStats] =
+    try {
+      import scala.jdk.CollectionConverters._
+      val reader = org.apache.orc.OrcFile.createReader(
+        new Path(path), org.apache.orc.OrcFile.readerOptions(conf))
+      try {
+        val schema = reader.getSchema
+        val nRows = reader.getNumberOfRows
+        val stats = reader.getStatistics
+        Some(FooterStats(nRows, schema.getFieldNames.asScala.zip(schema.getChildren.asScala)
+          .map { case (name, t) =>
+            val st = stats(t.getId)
+            val (mn, mx): (Option[Any], Option[Any]) =
+              if (st.getNumberOfValues == 0L) (None, None)
+              else st match {
+                case i: org.apache.orc.IntegerColumnStatistics =>
+                  (Some(i.getMinimum), Some(i.getMaximum))
+                case d: org.apache.orc.DoubleColumnStatistics =>
+                  (Some(d.getMinimum), Some(d.getMaximum))
+                case _ => (None, None) // strings/decimals/timestamps: not served
+              }
+            name -> ColumnStats(mn.isDefined, mn, mx, Some(nRows - st.getNumberOfValues))
+          }.toMap))
+      } finally reader.close()
+    } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Per-file Delta `add.stats` JSON for the data-schema columns whose
     * footer statistics the skipping path can serve — the Delta protocol's
@@ -177,7 +204,6 @@ object ZoneMap {
       spark: SparkSession, paths: Seq[String],
       schema: org.apache.spark.sql.types.StructType): Map[String, String] = {
     import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
     // kind: 'L' integral, 'D' floating, 'S' string
     val wanted: Seq[(String, Char)] = schema.fields.collect {
       case f if Seq(ByteType, ShortType, IntegerType, LongType).contains(f.dataType) =>
@@ -186,113 +212,29 @@ object ZoneMap {
       case f if f.dataType == StringType => f.name -> 'S'
     }.toSeq
     if (wanted.isEmpty || paths.isEmpty) return Map.empty
-    val confProps = spark.sessionState.newHadoopConf().asScala
-      .map(e => e.getKey -> e.getValue).toMap
-    // small commits read their footers ON THE DRIVER: the commit's own
-    // staging walk/renames just touched these files driver-side, and
-    // scheduling a distributed job for a handful of footer reads costs
-    // more than the reads (profiled: the per-append stats job was pure
-    // scheduling latency at single-digit file counts). Large commits —
-    // the 100 TB regime, thousands of files per append — keep the job.
-    val localCutoff =
-      spark.conf.get("spark.graft.stats.localFooterCutoff", "32").toInt
-    if (paths.size <= localCutoff)
-      paths.map(p => p -> deltaStatsForFile(confProps, p, wanted))
-        .collect { case (p, Some(j)) => p -> j }.toMap
-    else {
-      val parallelism = math.min(paths.size, spark.sparkContext.defaultParallelism).max(1)
-      spark.sparkContext.parallelize(paths, parallelism).map { p =>
-        p -> deltaStatsForFile(confProps, p, wanted)
-      }.collect().collect { case (p, Some(j)) => p -> j }.toMap
-    }
-  }
-
-  /** One file's stats JSON; None when the footer is unreadable. */
-  private def deltaStatsForFile(
-      confProps: Map[String, String], path: String,
-      wanted: Seq[(String, Char)]): Option[String] = {
+    // a commit's own files: small appends read their footers on the
+    // driver, the 100 TB regime's thousands of files per append in a job
     import org.json4s._
     import org.json4s.jackson.JsonMethods
-    import scala.jdk.CollectionConverters._
-    // a string bound is only emitted when Java string comparison agrees
-    // with the footer's byte order: ASCII-to-BMP text without surrogates,
-    // bounded length (parquet truncation of long binary stats would make
-    // a recorded "max" a PREFIX — not an upper bound)
-    def safeString(s: String): Boolean =
-      s.length <= 64 && !s.exists(Character.isSurrogate)
-    try {
-      val conf = new org.apache.hadoop.conf.Configuration(true)
-      confProps.foreach { case (k, v) => conf.set(k, v) }
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(path), conf))
-      val footer = try reader.getFooter finally reader.close()
-      var rows = 0L
-      final class Acc {
-        var complete = true
-        var nullsKnown = true
-        var nulls = 0L
-        var loL = 0L; var hiL = 0L
-        var loD = 0d; var hiD = 0d
-        var loS: String = null; var hiS: String = null
-        var saw = false
-      }
-      val accs = wanted.map { case (c, k) => (c, k, new Acc) }
-      footer.getBlocks.asScala.foreach { block =>
-        rows += block.getRowCount
-        val byName = block.getColumns.asScala.map(c => c.getPath.toDotString -> c).toMap
-        accs.foreach { case (cname, kind, a) =>
-          byName.get(cname) match {
-            case None => a.complete = false // column absent from this block
-            case Some(chunk) =>
-              val st: org.apache.parquet.column.statistics.Statistics[_] =
-                chunk.getStatistics
-              if (st == null || st.isEmpty) a.complete = false
-              else {
-                if (st.isNumNullsSet) a.nulls += st.getNumNulls else a.nullsKnown = false
-                if (st.hasNonNullValue) {
-                  (kind, st.genericGetMin.asInstanceOf[AnyRef],
-                    st.genericGetMax.asInstanceOf[AnyRef]) match {
-                    case ('L', mn: Number, mx: Number) =>
-                      val (l, h) = (mn.longValue(), mx.longValue())
-                      if (a.saw) { a.loL = math.min(a.loL, l); a.hiL = math.max(a.hiL, h) }
-                      else { a.loL = l; a.hiL = h; a.saw = true }
-                    case ('D', mn: Number, mx: Number) =>
-                      val (l, h) = (mn.doubleValue(), mx.doubleValue())
-                      if (a.saw) { a.loD = math.min(a.loD, l); a.hiD = math.max(a.hiD, h) }
-                      else { a.loD = l; a.hiD = h; a.saw = true }
-                    case ('S', mn: org.apache.parquet.io.api.Binary,
-                        mx: org.apache.parquet.io.api.Binary) =>
-                      val l = mn.toStringUsingUTF8; val h = mx.toStringUsingUTF8
-                      if (!safeString(l) || !safeString(h)) a.complete = false
-                      else if (a.saw) {
-                        if (l < a.loS) a.loS = l
-                        if (h > a.hiS) a.hiS = h
-                      } else { a.loS = l; a.hiS = h; a.saw = true }
-                    case _ => a.complete = false
-                  }
-                } // an all-null chunk contributes no range but stays complete
-              }
-          }
+    readEach(spark, paths)(parquetFooter).collect { case (p, Some(footer)) =>
+      val cols = wanted.flatMap { case (c, kind) => footer.columns.get(c).map((c, kind, _)) }
+      val ranged = cols.flatMap { case (c, kind, s) =>
+        def json(v: Option[Any]): Option[JValue] = (kind, v) match {
+          case ('L', Some(l: Long))   => Some(JLong(l))
+          case ('D', Some(d: Double)) => Some(JDouble(d))
+          case ('S', Some(t: String)) => Some(JString(t))
+          case _                      => None
         }
+        json(s.min).zip(json(s.max)).map { case (lo, hi) => (c, lo, hi) }
       }
-      def bound(kind: Char, a: Acc, lo: Boolean): JValue = kind match {
-        case 'L' => JLong(if (lo) a.loL else a.hiL)
-        case 'D' => JDouble(if (lo) a.loD else a.hiD)
-        case _   => JString(if (lo) a.loS else a.hiS)
-      }
-      val ranged = accs.filter { case (_, _, a) => a.complete && a.saw }
-      val obj = JObject(
-        "numRecords" -> JLong(rows),
-        "minValues" -> JObject(ranged.map { case (c, k, a) => c -> bound(k, a, lo = true) }.toList),
-        "maxValues" -> JObject(ranged.map { case (c, k, a) => c -> bound(k, a, lo = false) }.toList),
-        "nullCount" -> JObject(accs.collect {
-          case (c, _, a) if a.complete && a.nullsKnown => c -> (JLong(a.nulls): JValue)
-        }.toList))
-      Some(JsonMethods.compact(JsonMethods.render(obj)))
-    } catch {
-      case scala.util.control.NonFatal(_) => None
-    }
+      p -> JsonMethods.compact(JsonMethods.render(JObject(
+        "numRecords" -> JLong(footer.rows),
+        "minValues" -> JObject(ranged.map { case (c, lo, _) => c -> lo }.toList),
+        "maxValues" -> JObject(ranged.map { case (c, _, hi) => c -> hi }.toList),
+        "nullCount" -> JObject(cols.collect {
+          case (c, _, s) if s.complete && s.nulls.isDefined => c -> (JLong(s.nulls.get): JValue)
+        }.toList))))
+    }.toMap
   }
 
   /** Paths whose zone CAN satisfy `column BETWEEN lo AND hi`: a file is
@@ -315,31 +257,20 @@ object ZoneMap {
   // same idea over column ranges).
   // ---------------------------------------------------------------------
 
-  /** Driver-side (path, column) → (min, max) cache. Parquet files are
-    * immutable in this model (the same assumption StaticCatalog's
-    * inference cache makes), so footer ranges never go stale; repeated
-    * queries against a catalog pay the footer reads once. */
-  private val zoneCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), (Option[Double], Option[Double])]()
+  /** A column's (min, max); None bounds are unknown and never prune. */
+  private[sources] type Range = (Option[Double], Option[Double])
+  private val Unknown: Range = (None, None)
 
-  /** Directories whose sidecar has already been probed this process —
-    * hit or miss — so repeated miss batches (a column absent from the
-    * manifest, a sidecar-less table) never re-pay the exists() probe or
-    * re-read rows already in [[zoneCache]]. */
-  private val seededDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** Cache the ranges known for one file identity — the hook log-carried
+    * stats (Delta `add.stats`) and the sidecar use to pre-warm pruning
+    * without any footer read. */
+  private[sources] def seedZones(file: FileId, ranges: Map[String, Range]): Unit =
+    MetaCache.put(Zones(file), ranges,
+      2L * file.path.length + ranges.keysIterator.map(80L + 2L * _.length).sum)
 
-  private[graft] def clearZoneCache(): Unit = { zoneCache.clear(); seededDirs.clear() }
-
-  /** Seed one (path, column) range directly — the hook log-carried stats
-    * (Delta `add.stats`) use to pre-warm pruning without any footer read. */
-  private[graft] def seedEntry(
-      path: String, column: String,
-      mn: Option[Double], mx: Option[Double]): Unit =
-    zoneCache.put((path, column), (mn, mx))
-
-  private[graft] def isSeeded(path: String, column: String): Boolean =
-    zoneCache.containsKey((path, column))
+  private def cachedZones(files: Iterable[FileId]): Map[FileId, Map[String, Range]] =
+    MetaCache.present[Zones, Map[String, Range]](files.map(Zones(_)))
+      .map { case (k, v) => k.file -> v }
 
   /** Number of FILES whose footers have been opened by manifest builds in
     * this process — observability for the sidecar path (a seeded cache
@@ -350,85 +281,113 @@ object ZoneMap {
   private def sidecarDir(tableDir: String): String = s"$tableDir/_zonemap"
 
   /** PERSIST the footer-stats manifest as a `_zonemap/` sidecar under the
-    * table root — one parquet dataset of (file, column, rows, min, max,
-    * null_count) over every data file and each of `columns` — so a FRESH
-    * process seeds its pruning cache from files-sized metadata instead of
-    * re-opening every footer (the role `_last_checkpoint` plays for the
-    * Delta replay). Append-only tables stay correct without rewriting the
-    * sidecar: a file missing from the manifest is a cache miss and falls
-    * back to its footer. The sidecar name is `_`-prefixed, so catalog
-    * discovery never mistakes it for data. Returns the sidecar path. */
+    * table root — one parquet dataset of (file, length,
+    * modification_time, column, rows, min, max, null_count) over every
+    * data file and each of `columns` — so a FRESH process seeds its
+    * pruning cache from files-sized metadata instead of re-opening every
+    * footer (the role `_last_checkpoint` plays for the Delta replay). A
+    * file added or rewritten after the save has an identity the sidecar
+    * does not hold: a cache miss that falls back to its footer, so the
+    * sidecar never needs rewriting to stay correct. The sidecar name is
+    * `_`-prefixed, so catalog discovery never mistakes it for data.
+    * Returns the sidecar path. */
   def saveManifest(
       spark: SparkSession, tableDir: String, columns: Seq[String],
       format: String = "parquet"): String = {
     require(columns.nonEmpty, "need at least one column to manifest")
     val paths = FsUtil.walkDataFiles(spark, tableDir, s".$format").map(_._1)
     require(paths.nonEmpty, s"no $format files under '$tableDir'")
-    val stats = columns.map { c =>
-      val s = if (format == "orc") orcFileStats(spark, paths, c)
-              else fileStats(spark, paths, c)
-      s.withColumn("column", lit(c))
-    }.reduce(_.unionByName(_))
+    // stat before reading: a rewrite in between pins the NEW range to the
+    // OLD identity, which is harmless (any read sees the new bytes); the
+    // reverse order would pin the old range to the new identity
+    val ids = paths.map(p => p -> FsUtil.status(spark, p)).toMap
+    val rows = readEach(spark, paths)(footerReader(format)).flatMap { case (p, footer) =>
+      columns.map { c =>
+        val (mn, mx) = footer.fold(Unknown)(_.range(c))
+        (p, ids(p).getLen, ids(p).getModificationTime, c, footer.fold(0L)(_.rows),
+          mn, mx, footer.flatMap(_.columns.get(c)).flatMap(_.nulls))
+      }
+    }
     val out = sidecarDir(tableDir)
-    stats.coalesce(1).write.mode("overwrite").parquet(out)
+    spark.createDataFrame(rows)
+      .toDF("file", "length", "modification_time", "column", "rows", "min", "max", "null_count")
+      .coalesce(1).write.mode("overwrite").parquet(out)
     out
   }
 
   /** Seed the process-local pruning cache from a table's `_zonemap/`
     * sidecar, if present; returns the number of (file, column) entries
-    * loaded (0 when there is no sidecar). Idempotent and cheap — the
-    * sidecar is files-sized metadata. */
+    * loaded (0 when there is no sidecar, or it predates file identities).
+    * Idempotent and cheap — the sidecar is files-sized metadata. */
   def seedFromSidecar(spark: SparkSession, tableDir: String): Long = {
     val dir = sidecarDir(tableDir)
     if (!FsUtil.exists(spark, s"$dir/_SUCCESS")) return 0L
-    val rows = spark.read.parquet(dir)
-      .select(col("file"), col("column"), col("min"), col("max"))
+    val sidecar = spark.read.parquet(dir)
+    if (!sidecar.columns.contains("modification_time")) return 0L
+    val rows = sidecar
+      .select(col("file"), col("length"), col("modification_time"),
+        col("column"), col("min"), col("max"))
       .collect()
-    rows.foreach { r =>
-      def d(i: Int): Option[Double] = if (r.isNullAt(i)) None else Some(r.getDouble(i))
-      zoneCache.put((r.getString(0), r.getString(1)), (d(2), d(3)))
+    val byFile = rows.groupBy(r => FileId(r.getString(0), r.getLong(1), r.getLong(2)))
+    val cached = cachedZones(byFile.keys)
+    byFile.foreach { case (id, rs) =>
+      def d(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
+        if (r.isNullAt(i)) None else Some(r.getDouble(i))
+      seedZones(id, cached.getOrElse(id, Map.empty) ++
+        rs.map(r => r.getString(3) -> (d(r, 4), d(r, 5))))
     }
     rows.length.toLong
   }
 
-  /** (min, max) per path for `column`, consulting [[zoneCache]] and
-    * reading only the MISSING footers (distributed via [[fileStats]] /
-    * [[orcFileStats]] per the catalog's format — a path is one format
-    * for life, so the cache key stays (path, column)). */
+  private def footerReader(format: String): (Configuration, String) => Option[FooterStats] =
+    if (format == "orc") orcFooter else parquetFooter
+
+  /** (min, max) of `column` for each of `files`, in order. A file's zone
+    * entry holds every numeric column range known for its identity; only
+    * files whose entry lacks `column` are looked up — first in their
+    * table root's sidecar (probed once per root while the cache holds the
+    * probe), then in their own footers, read per the catalog's format.
+    * A footer read caches every numeric range the footer carries. */
   private def zonesFor(
-      spark: SparkSession, paths: Seq[String], column: String,
-      format: String)
-      : Map[String, (Option[Double], Option[Double])] = {
-    val (_, miss0) = paths.partition(p => zoneCache.containsKey((p, column)))
-    if (miss0.nonEmpty) {
-      // a fresh process may have a PERSISTED manifest next to the data —
-      // seed from each missing file's TABLE ROOT sidecar before paying
-      // any footer read. saveManifest writes the sidecar at the table
-      // root; a Hive-partitioned file sits under `col=value` segments,
-      // so ascend past every '='-named directory to find that root
-      // (flat layouts ascend zero levels: parent IS the root). Each
-      // directory is probed at most once per process (seededDirs).
+      spark: SparkSession, files: Seq[SizedFile], column: String,
+      format: String): Seq[Range] = {
+    var zones = cachedZones(files.map(_.id))
+    def missing = files.filterNot(f => zones.get(f.id).exists(_.contains(column)))
+    if (missing.nonEmpty) {
+      // a fresh process may have a PERSISTED manifest next to the data.
+      // saveManifest writes the sidecar at the table root; a
+      // Hive-partitioned file sits under `col=value` segments, so ascend
+      // past every '='-named directory to find that root (flat layouts
+      // ascend zero levels: parent IS the root)
       def tableRoot(p: String): String = {
-        var d = new org.apache.hadoop.fs.Path(p).getParent
+        var d = new Path(p).getParent
         while (d.getParent != null && d.getName.contains("=")) d = d.getParent
         d.toString
       }
-      miss0.map(tableRoot).distinct
-        .filter(seededDirs.add) // false ⇒ already probed this process
-        .foreach(d => seedFromSidecar(spark, d))
-      val miss = miss0.filterNot(p => zoneCache.containsKey((p, column)))
+      val roots = missing.map(f => tableRoot(f.key)).distinct.map(SidecarProbed(_))
+      val probed = MetaCache.present[SidecarProbed, AnyRef](roots)
+      val unprobed = roots.filterNot(probed.contains)
+      unprobed.foreach { r =>
+        seedFromSidecar(spark, r.dir)
+        MetaCache.put(r, r, 2L * r.dir.length)
+      }
+      if (unprobed.nonEmpty) zones = zones ++ cachedZones(missing.map(_.id))
+      val miss = missing
       if (miss.nonEmpty) {
         footerReads.addAndGet(miss.size.toLong)
-        val stats =
-          if (format == "orc") orcFileStats(spark, miss, column)
-          else fileStats(spark, miss, column)
-        stats.select("file", "min", "max").collect().foreach { r =>
-          def d(i: Int): Option[Double] = if (r.isNullAt(i)) None else Some(r.getDouble(i))
-          zoneCache.put((r.getString(0), column), (d(1), d(2)))
+        val footers = readEach(spark, miss.map(_.key).distinct)(footerReader(format)).toMap
+        miss.foreach { f =>
+          val footer = footers(f.key)
+          val known = footer.fold(Map.empty[String, Range])(ft =>
+            ft.columns.keys.map(c => c -> ft.range(c)).toMap.filter(_._2 != Unknown))
+          val ranges = zones.getOrElse(f.id, Map.empty) ++ known +
+            (column -> footer.fold(Unknown)(_.range(column)))
+          seedZones(f.id, ranges)
+          zones += f.id -> ranges
         }
       }
     }
-    paths.map(p => p -> zoneCache.get((p, column))).toMap
+    files.map(f => zones.get(f.id).flatMap(_.get(column)).getOrElse(Unknown))
   }
 
   /** A harvested inclusive range constraint; open bounds are relaxed to
@@ -569,13 +528,10 @@ object ZoneMap {
       .map(f => f.name.toLowerCase(java.util.Locale.ROOT) -> ColumnMapping.physicalName(f))
       .toMap
     ranges.foldLeft(files) { case (fs, (cLower, r)) =>
-      val zones = zonesFor(spark, fs.map(_.key), byLower(cLower), format)
-      fs.filter { f =>
-        zones(f.key) match {
-          case (Some(mn), Some(mx)) => !(mx < r.lo || mn > r.hi)
-          case _                    => true // unknown range: never skip
-        }
-      }
+      fs.zip(zonesFor(spark, fs, byLower(cLower), format)).filter {
+        case (_, (Some(mn), Some(mx))) => !(mx < r.lo || mn > r.hi)
+        case _                         => true // unknown range: never skip
+      }.map(_._1)
     }
   }
 }

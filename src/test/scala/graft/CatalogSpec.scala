@@ -59,6 +59,52 @@ class CatalogSpec extends AnyFunSuite {
     }
   }
 
+  test("partition pruning of a warm Static or Delta catalog starts no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.model.{BuzzCapacity, BuzzQuery, BuzzStep, BuzzStepType}
+    val deltaDir = tmpDir("graft_prune_jobs")
+    graft.operators.Sinks.deltaAppend(
+      (0L until 30L).map(i => (i.toLong, s"g${i % 3}")).toDF("data_col", "g").coalesce(1),
+      deltaDir, Seq("g"))
+    val catalogs = Seq(
+      partitionedCatalog() -> "month <= '2020/02'",
+      DeltaCatalog.fromDeltaLog(spark, deltaDir, "pj") -> "g IN ('g0', 'g2')")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    def jobsDuring[T](body: => T): (T, Int) = {
+      org.apache.spark.TestListeners.drain(spark.sparkContext)
+      val before = jobs.get
+      val out = body
+      org.apache.spark.TestListeners.drain(spark.sparkContext)
+      (out, jobs.get - before)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try catalogs.foreach { case (cat, filter) =>
+      cat.prune(spark, Some(filter)) // warm
+      val (kept, started) = jobsDuring(cat.prune(spark, Some(filter)))
+      assert(kept.size == 2 && cat.files.size == 3, s"kept ${kept.map(_.key)}")
+      assert(started == 0, s"prune on ${cat.name} started $started job(s)")
+      // the planner's whole pruning path, zone pruning included
+      val query = BuzzQuery(Seq(
+        BuzzStep(s"SELECT sum(data_col) AS s FROM ${cat.name} WHERE data_col BETWEEN 0 AND 1",
+          "m", BuzzStepType.HBee, Some(filter)),
+        BuzzStep("SELECT sum(s) AS s FROM m", "r", BuzzStepType.HComb, None)),
+        BuzzCapacity(1), Nil)
+      val planner = new graft.plans.QueryPlanner(Map(cat.name -> cat))
+      planner.validateAndPrune(spark, query) // warm
+      val (plan, planJobs) = jobsDuring(planner.validateAndPrune(spark, query))
+      assert(plan.filesAfterPartition == 2 && plan.files.nonEmpty)
+      assert(planJobs == 0, s"validateAndPrune on ${cat.name} started $planJobs job(s)")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // a filter that fails while the optimizer evaluates it on the driver
+    // (ANSI cast of a non-numeric partition value) is still a PlanError
+    intercept[BuzzException.PlanError] {
+      catalogs.head._1.prune(spark, Some("CAST(month AS INT) = 1"))
+    }
+  }
+
   test("read appends partition values as string columns") {
     val cat = partitionedCatalog()
     val df = cat.read(spark, cat.files)
@@ -581,7 +627,7 @@ class CatalogSpec extends AnyFunSuite {
       .repartitionByRange(4, col("id")).sortWithinPartitions("id")
       .write.partitionBy("g").mode("overwrite").parquet(dir)
     ZoneMap.saveManifest(spark, dir, Seq("id"))
-    ZoneMap.clearZoneCache()
+    MetaCache.reset()
     val cat = StaticCatalog.overPath(spark, "zh", dir)
     assert(cat.partitionColumns == Seq("g"))
     assert(cat.files.size == 8) // 4 id-ranges × 2 partitions

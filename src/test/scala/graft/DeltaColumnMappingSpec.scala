@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.BuzzException
 import graft.operators.Sinks
-import graft.sources.{ColumnMapping, DeltaCatalog, ZoneMap}
+import graft.sources.{ColumnMapping, DeltaCatalog, MetaCache, ZoneMap}
 
 /** RENAME COLUMN via column mapping (name mode): one metaData-only commit,
   * zero files rewritten — readers scan physical parquet names and surface
@@ -89,7 +89,7 @@ class DeltaColumnMappingSpec extends AnyFunSuite {
     val dir = tmpDir("cm_prune")
     clustered(dir)
     Sinks.deltaRenameColumn(spark, dir, "id", "doc_id")
-    ZoneMap.clearZoneCache()
+    MetaCache.reset()
     val cat = DeltaCatalog.fromDeltaLog(spark, dir, "cm_zone")
     // range predicate on the LOGICAL name prunes via physically-keyed stats
     val pruned = ZoneMap.pruneForQuery(spark, cat.schema, cat.files,

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.BuzzException
 import graft.operators.Sinks
-import graft.sources.{DeletionVectors, DeltaCatalog, DvDescriptor, FsUtil}
+import graft.sources.{DeletionVectors, DeltaCatalog, DvDescriptor, FsUtil, MetaCache}
 
 /** Delta protocol conformance at the BYTE and GATE level: the portable
   * 64-bit RoaringBitmap deletion-vector format a foreign reader must be
@@ -548,7 +548,7 @@ class DeltaProtocolSpec extends AnyFunSuite {
     val written = spark.read.parquet(cp)
     assert(written.select("protocol.minReaderVersion").schema.head.dataType == IntegerType)
     assert(written.where(col("protocol").isNotNull).count() == 1)
-    DeltaCatalog.invalidateReplayCache()
+    MetaCache.reset()
     assert(allIds(dir) == ((0L until 10L) ++ (100L until 110L)))
   }
 

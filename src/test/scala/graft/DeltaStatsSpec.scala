@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Sinks
-import graft.sources.{DeltaCatalog, FsUtil, ZoneMap}
+import graft.sources.{DeltaCatalog, FsUtil, MetaCache, ZoneMap}
 
 /** Delta data-skipping stats: per-file (numRecords, minValues, maxValues,
   * nullCount) written into `add.stats` at commit time and consumed at
@@ -66,7 +66,7 @@ class DeltaStatsSpec extends AnyFunSuite {
   test("a Delta catalog prunes range predicates from the log with zero footer reads") {
     val dir = tmpDir("graft_dprune")
     writeClustered(dir)
-    ZoneMap.clearZoneCache()
+    MetaCache.reset()
     val cat = DeltaCatalog.fromDeltaLog(spark, dir, "dp")
     assert(cat.files.size == 4)
     val before = ZoneMap.footerReads.get()
@@ -87,7 +87,7 @@ class DeltaStatsSpec extends AnyFunSuite {
     Sinks.deltaCheckpoint(spark, dir, cleanCommits = true)
     assert(!FsUtil.exists(spark, s"$dir/_delta_log/${"0" * 20}.json"),
       "commit cleaning should have removed the JSON commit")
-    ZoneMap.clearZoneCache()
+    MetaCache.reset()
     val cat = DeltaCatalog.fromDeltaLog(spark, dir, "dcp")
     val before = ZoneMap.footerReads.get()
     val pruned = ZoneMap.pruneForQuery(spark, cat.schema, cat.files,
@@ -120,7 +120,7 @@ class DeltaStatsSpec extends AnyFunSuite {
       .map(_.getPath.getName).filter(_.contains("checkpoint")).sorted
     assert(logFiles.exists(_.matches("\\d{20}\\.checkpoint\\.\\d{10}\\.\\d{10}\\.parquet")),
       s"expected multi-part layout, got $logFiles")
-    ZoneMap.clearZoneCache()
+    MetaCache.reset()
     val cat = DeltaCatalog.fromDeltaLog(spark, dir, "dcp_parts")
     assert(cat.files.size == 4)
     assert(cat.read(spark, cat.files).count() === 400L)
@@ -153,7 +153,7 @@ class DeltaStatsSpec extends AnyFunSuite {
     assert(adds.nonEmpty && adds.forall(_.contains("\"stats\"")),
       s"optimized adds must carry stats:\n$commit")
     // the compacted file spans the full range: stats must say so
-    ZoneMap.clearZoneCache()
+    MetaCache.reset()
     val cat = DeltaCatalog.fromDeltaLog(spark, dir, "dopt")
     val before = ZoneMap.footerReads.get()
     val all = ZoneMap.pruneForQuery(spark, cat.schema, cat.files,
@@ -166,7 +166,7 @@ class DeltaStatsSpec extends AnyFunSuite {
     val reAdds = restCommit.linesIterator.filter(_.contains("\"add\"")).toSeq
     assert(reAdds.nonEmpty && reAdds.forall(_.contains("\"stats\"")),
       s"restore re-adds must keep stats:\n$restCommit")
-    ZoneMap.clearZoneCache()
+    MetaCache.reset()
     val cat2 = DeltaCatalog.fromDeltaLog(spark, dir, "drest")
     val before2 = ZoneMap.footerReads.get()
     val pruned = ZoneMap.pruneForQuery(spark, cat2.schema, cat2.files,
@@ -178,7 +178,7 @@ class DeltaStatsSpec extends AnyFunSuite {
   test("the two-stage engine zone-prunes a DeltaLake catalog (explain shows it)") {
     val dir = tmpDir("graft_dengine")
     writeClustered(dir)
-    ZoneMap.clearZoneCache()
+    MetaCache.reset()
     val engine = new graft.plans.BuzzEngine(Map.empty)
     val json =
       s"""{
@@ -211,7 +211,7 @@ class DeltaStatsSpec extends AnyFunSuite {
       .toDF("id", "g", "v")
       .repartitionByRange(2, col("g"), col("id")).sortWithinPartitions("id")
     Sinks.deltaAppend(df, dir, Seq("g"))
-    ZoneMap.clearZoneCache()
+    MetaCache.reset()
     val cat = DeltaCatalog.fromDeltaLog(spark, dir, "dpart")
     assert(cat.partitionColumns == Seq("g"))
     assert(!cat.schema.fieldNames.contains("g"))

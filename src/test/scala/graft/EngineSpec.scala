@@ -4,7 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model._
 import graft.plans.BuzzEngine
-import graft.sources.StaticCatalog
+import graft.sources.{MetaCache, StaticCatalog}
 
 /** End-to-end two-stage execution over real testdata — the Spark analogue of
   * the reference's integ binary (bin/main_integ.rs) running the README query
@@ -307,7 +307,7 @@ class EngineSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(dir)
     // persist the manifest, then simulate a fresh process (cold cache)
     ZoneMap.saveManifest(spark, dir, Seq("id"))
-    ZoneMap.clearZoneCache()
+    MetaCache.reset()
     // the sidecar must NOT be discovered as data by the catalog walk
     val cat = StaticCatalog.overPath(spark, "zs", dir)
     assert(cat.files.size == 4,
@@ -329,7 +329,7 @@ class EngineSpec extends AnyFunSuite {
     // falls back to its own footer — append-only tables stay correct
     Seq((1000L, 9L)).toDF("id", "v").coalesce(1)
       .write.mode("append").parquet(dir)
-    ZoneMap.clearZoneCache()
+    MetaCache.reset()
     val cat2 = StaticCatalog.overPath(spark, "zs2", dir)
     assert(cat2.files.size == 5)
     val eng2 = new BuzzEngine(Map("zs2" -> cat2))
@@ -340,6 +340,50 @@ class EngineSpec extends AnyFunSuite {
         BuzzStep("SELECT sum(s) AS total FROM m", "r", BuzzStepType.HComb, None)),
       BuzzCapacity(1), Nil)
     assert(eng2.run(spark, q2).collect()(0).getLong(0) == 9L)
+  }
+
+  /** Writes `df` as the single parquet file `path`, replacing any file
+    * there, after waiting out one mtime tick. */
+  private def rewriteFile(df: org.apache.spark.sql.DataFrame, path: String): Unit = {
+    Thread.sleep(1100)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_rewrite").resolve("out")
+    df.coalesce(1).write.parquet(tmp.toString)
+    val part = tmp.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(path),
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+  }
+
+  private def staticQuery(uri: String, mapSql: String, reduceSql: String): String =
+    s"""{"steps": [{"sql": "$mapSql", "name": "m", "step_type": "HBee"},
+       |  {"sql": "$reduceSql", "name": "r", "step_type": "HComb"}],
+       | "capacity": {"zones": 1},
+       | "catalogs": [{"name": "t", "type": "Static", "uri": "$uri"}]}""".stripMargin
+
+  test("zone pruning follows a Static file rewritten in place, not its old range") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_zm_rewrite").toString
+    rewriteFile((0L until 50L).toDF("id"), s"$dir/a.parquet")
+    rewriteFile((50L until 100L).toDF("id"), s"$dir/b.parquet")
+    val json = staticQuery(dir,
+      "SELECT count(*) AS n FROM t WHERE id BETWEEN 200 AND 300", "SELECT sum(n) AS n FROM m")
+    assert(new BuzzEngine(Map.empty).runJson(spark, json).collect()(0).getLong(0) == 0L)
+    // b now holds 60 rows in range: a new length and a new mtime
+    rewriteFile((200L until 260L).toDF("id"), s"$dir/b.parquet")
+    val direct = spark.read.parquet(dir).where("id BETWEEN 200 AND 300").count()
+    assert(direct == 60L)
+    assert(new BuzzEngine(Map.empty).runJson(spark, json).collect()(0).getLong(0) == direct)
+  }
+
+  test("an inferred Static schema follows its file rewritten in place") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_infer_rewrite").toString
+    val x = s"$dir/x.parquet"
+    rewriteFile((0L until 10L).toDF("id"), x)
+    assert(new BuzzEngine(Map.empty).runJson(spark, staticQuery(x,
+      "SELECT count(*) AS n FROM t", "SELECT sum(n) AS n FROM m")).collect()(0).getLong(0) == 10L)
+    rewriteFile((0L until 10L).map(i => (i, i * 2)).toDF("id", "v"), x)
+    assert(new BuzzEngine(Map.empty).runJson(spark, staticQuery(x,
+      "SELECT sum(v) AS s FROM t", "SELECT sum(s) AS s FROM m")).collect()(0).getLong(0) == 90L)
   }
 
   test("zone maps prune ORC catalogs from footer statistics like parquet ones") {
