@@ -409,7 +409,8 @@ object Sinks {
     // of OTHER partitions commute (no append probe); a concurrent
     // DELETE/OPTIMIZE that touched one of ITS inputs fails loudly.
     val adds = newFiles.toSeq.map { case (relPath, dest, pv) =>
-      (relPath, fsys.getFileStatus(dest).getLen, cat.partitionColumns.zip(pv))
+      val st = fsys.getFileStatus(dest)
+      AddedFile(relPath, st.getLen, cat.partitionColumns.zip(pv), st.getModificationTime)
     }
     commitRewrite(spark, tablePath, adds, removedRaws.toSeq.distinct,
       cat.schema, "optimize", snapshotVersion = version0, dataChange = false)
@@ -456,6 +457,7 @@ object Sinks {
       val target = DeltaCatalog.liveRawAt(spark, tablePath, Some(version))
       val targetStats = DeltaCatalog.statsByRaw(spark, tablePath, Some(version))
       val targetDvs = DeltaCatalog.dvsByRaw(spark, tablePath, Some(version))
+      val targetMtimes = DeltaCatalog.mtimesByRaw(spark, tablePath, Some(version))
       val current = DeltaCatalog.liveRawAt(spark, tablePath, None)
       val currentDvs = DeltaCatalog.dvsByRaw(spark, tablePath, None)
       if (target == current && targetDvs == currentDvs) return head
@@ -500,9 +502,11 @@ object Sinks {
           "size" -> JLong(size),
           "partitionValues" -> JObject(pv.map { case (k, v) =>
             k -> (JString(v): JValue) }.toList),
+          "modificationTime" -> JLong(targetMtimes.getOrElse(raw, now)),
           "dataChange" -> JBool(true))
-        // re-adds keep the stats they had at the target version, so a
-        // restored table prunes exactly like the original snapshot did
+        // re-adds keep the stats and modification time they had at the
+        // target version, so a restored table prunes exactly like the
+        // original snapshot did and its files keep their cache identity
         val withStats = targetStats.get(raw)
           .fold(base)(s => base :+ ("stats" -> (JString(s): JValue)))
         val fields = targetDvs.get(raw).fold(withStats)(d =>
@@ -1044,7 +1048,7 @@ object Sinks {
   private def stageChangeData(
       spark: org.apache.spark.sql.SparkSession, tablePath: String,
       partitionCols: Seq[String], physicalNames: Map[String, String],
-      changeRows: DataFrame): Seq[(String, Long, Seq[(String, String)])] =
+      changeRows: DataFrame): Seq[AddedFile] =
     stageIntoTable(changeRows, tablePath, partitionCols, physicalNames,
       destPrefix = "_change_data")
 
@@ -1603,8 +1607,10 @@ object Sinks {
         // foreign reader parsing the add schema may reject or mis-default
         // their absence. dataChange is false by spec (a checkpoint
         // restates state, it never changes facts); modificationTime is
-        // the checkpoint wall time (the per-file mtimes would cost one
-        // FileStatus per live file — 10^6 stats at the measured bound)
+        // each file's own, from its add action, so a checkpoint keeps
+        // every file's cache identity (the checkpoint wall time only where
+        // an add carried none: a stat per live file would cost 10^6 stats
+        // at the measured bound)
         StructField("modificationTime", LongType),
         StructField("dataChange", BooleanType),
         // data-skipping stats must survive into the checkpoint, or commit
@@ -1662,7 +1668,8 @@ object Sinks {
           Row(null,
             Row(raw, f.length,
               cat.partitionColumns.zip(f.partitionValues).toMap,
-              cpNow, java.lang.Boolean.FALSE,
+              if (f.modificationTime > 0) f.modificationTime else cpNow,
+              java.lang.Boolean.FALSE,
               statsByRaw.get(raw).orNull, dvRow), null, null, null)
         }) ++
         // unexpired tombstones (see cpSchema note); expired ones are
@@ -2884,6 +2891,13 @@ object Sinks {
     (m.copy(version = outVer), srcHead)
   }
 
+  /** A data file a commit adds: its table-relative path, size, Hive
+    * partition values and modification time, as the add action records
+    * them. */
+  private[graft] final case class AddedFile(
+      rel: String, size: Long, partitionValues: Seq[(String, String)],
+      modificationTime: Long)
+
   /** Commit a copy-on-write REWRITE (remove `removedRaws`, add `adds` with
     * fresh data-skipping stats) under the OPTIMIZE conflict discipline.
     *
@@ -2910,7 +2924,7 @@ object Sinks {
     * the layout writers (OPTIMIZE, ZORDER). */
   private[graft] def commitRewrite(
       spark: org.apache.spark.sql.SparkSession, tablePath: String,
-      adds: Seq[(String, Long, Seq[(String, String)])],
+      adds: Seq[AddedFile],
       removedRaws: Seq[String],
       dataSchema: org.apache.spark.sql.types.StructType,
       opName: String,
@@ -2922,7 +2936,7 @@ object Sinks {
       dvByRel: Map[String, graft.sources.DvDescriptor] = Map.empty,
       protocolActions: Seq[org.json4s.JValue] = Nil,
       operationParams: Map[String, String] = Map.empty,
-      cdcAdds: Seq[(String, Long, Seq[(String, String)])] = Nil): Long = {
+      cdcAdds: Seq[AddedFile] = Nil): Long = {
     import org.apache.hadoop.fs.Path
     import org.json4s._
     import org.json4s.jackson.JsonMethods
@@ -2935,16 +2949,18 @@ object Sinks {
     DeltaCatalog.assertWriterProtocol(spark, tablePath, opName)
     val statsByPath: Map[String, String] =
       try graft.sources.ZoneMap.deltaFileStats(
-        spark, adds.map { case (rel, _, _) => new Path(tablePath, rel).toString },
+        spark, adds.map(a => new Path(tablePath, a.rel).toString),
         // the files store PHYSICAL names (identity unless column-mapped)
         graft.sources.ColumnMapping.toPhysical(dataSchema))
       catch { case scala.util.control.NonFatal(_) => Map.empty }
     val now = System.currentTimeMillis()
-    val addActions: Seq[JValue] = adds.map { case (rel, size, pv) =>
+    val addActions: Seq[JValue] = adds.map { case AddedFile(rel, size, pv, mtime) =>
       val base: List[(String, JValue)] = List(
         "path" -> JString(DeltaCatalog.encodePath(rel)),
         "size" -> JLong(size),
         "partitionValues" -> JObject(pv.map { case (k, v) => k -> (JString(v): JValue) }.toList),
+        // a re-added file whose earlier add carried no time gets the commit's
+        "modificationTime" -> JLong(if (mtime > 0) mtime else now),
         "dataChange" -> JBool(dataChange))
       val withStats = statsByPath.get(new Path(tablePath, rel).toString)
         .fold(base)(s => base :+ ("stats" -> (JString(s): JValue)))
@@ -2976,7 +2992,7 @@ object Sinks {
     // the protocol's change-data actions: replay ignores them (cdc files
     // are never part of the live set); change-feed readers consume them
     // AUTHORITATIVELY for this commit instead of deriving from add/remove
-    val cdcActions: Seq[JValue] = cdcAdds.map { case (rel, size, pv) =>
+    val cdcActions: Seq[JValue] = cdcAdds.map { case AddedFile(rel, size, pv, _) =>
       JObject("cdc" -> JObject(List[(String, JValue)](
         "path" -> JString(DeltaCatalog.encodePath(rel)),
         "partitionValues" -> JObject(pv.map { case (k, v) => k -> (JString(v): JValue) }.toList),
@@ -3523,6 +3539,7 @@ object Sinks {
     val live = DeltaCatalog.liveRawAt(spark, srcPath, asOf)
     val stats = DeltaCatalog.statsByRaw(spark, srcPath, asOf)
     val dvs = DeltaCatalog.dvsByRaw(spark, srcPath, asOf)
+    val mtimes = DeltaCatalog.mtimesByRaw(spark, srcPath, asOf)
     val srcCat = DeltaCatalog.fromDeltaLog(spark, srcPath, "__clone_src",
       versionAsOf = asOf)
     val schemaJson = DeltaCatalog.storedSchema(spark, srcPath)
@@ -3537,6 +3554,7 @@ object Sinks {
         "size" -> JLong(size),
         "partitionValues" -> JObject(pv.map { case (k, v) =>
           k -> (JString(v): JValue) }.toList),
+        "modificationTime" -> JLong(mtimes.getOrElse(raw, System.currentTimeMillis())),
         "dataChange" -> JBool(true))
       val withStats = stats.get(raw)
         .fold(base)(s => base :+ ("stats" -> (JString(s): JValue)))
@@ -3779,8 +3797,8 @@ object Sinks {
     // (unmoved) footer inside commitRewrite
     val adds = affected.map { f =>
       val raw = rawByKey(f.key)
-      (DeltaCatalog.decodePath(raw), f.length,
-        cat.partitionColumns.zip(f.partitionValues))
+      AddedFile(DeltaCatalog.decodePath(raw), f.length,
+        cat.partitionColumns.zip(f.partitionValues), f.modificationTime)
     }
     val dvByRel = affected.map { f =>
       val rel = DeltaCatalog.decodePath(rawByKey(f.key))
@@ -3900,8 +3918,8 @@ object Sinks {
       throw new BuzzException.ExecutionError(
         s"migrate-dvs: no raw log path for live file ${f.key} — snapshot drifted")))
     val adds = affected.map { f =>
-      (DeltaCatalog.decodePath(rawByKey(f.key)), f.length,
-        cat.partitionColumns.zip(f.partitionValues))
+      AddedFile(DeltaCatalog.decodePath(rawByKey(f.key)), f.length,
+        cat.partitionColumns.zip(f.partitionValues), f.modificationTime)
     }
     val dvByRel = affected.map { f =>
       DeltaCatalog.decodePath(rawByKey(f.key)) -> dvByNorm(FsUtil.normalizePath(f.key))
@@ -4067,14 +4085,14 @@ object Sinks {
   /** Stage `data` as parquet under a hidden temp dir INSIDE the table
     * (same filesystem — renames stay atomic-ish and cheap), then move each
     * file into its final `k=v/...` place; nothing is visible to readers
-    * until a commit references the files. Returns one
-    * (relPath, size, partitionValues) per staged file. A crash mid-stage
+    * until a commit references the files. Returns one [[AddedFile]] per
+    * staged file, sized and dated by its placed status. A crash mid-stage
     * leaves only invisible files for the next maintenance pass. */
   private def stageIntoTable(
       data: DataFrame, tablePath: String, partitionCols: Seq[String],
       physicalNames: Map[String, String] = Map.empty,
       destPrefix: String = "")
-      : Seq[(String, Long, Seq[(String, String)])] = {
+      : Seq[AddedFile] = {
     import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
     import graft.sources.FsUtil
@@ -4111,7 +4129,8 @@ object Sinks {
       if (!fsys.rename(file, dest))
         throw new BuzzException.ExecutionError(s"staging rename failed for $rel")
       val pv = segs.map { case (k, v) => k -> unescapePathName(v) }
-      (rel, fsys.getFileStatus(dest).getLen, pv)
+      val st = fsys.getFileStatus(dest)
+      AddedFile(rel, st.getLen, pv, st.getModificationTime)
     }
     fsys.delete(new Path(stage), true)
     adds
@@ -4256,10 +4275,10 @@ object Sinks {
         .map(f => f.copy(name = physNames.getOrElse(f.name, f.name))))
     val statsByPath: Map[String, String] =
       try graft.sources.ZoneMap.deltaFileStats(
-        spark, adds.map { case (rel, _, _) => new Path(tablePath, rel).toString },
+        spark, adds.map(a => new Path(tablePath, a.rel).toString),
         dataSchema)
       catch { case scala.util.control.NonFatal(_) => Map.empty }
-    val addActions: Seq[JValue] = adds.map { case (rel, size, pv) =>
+    val addActions: Seq[JValue] = adds.map { case AddedFile(rel, size, pv, mtime) =>
       val base: List[(String, JValue)] = List(
         // URI-encode the on-disk rel path per the protocol — the reader
         // URI-decodes add.path, so a raw name containing '%' (Hive-escaped
@@ -4267,6 +4286,7 @@ object Sinks {
         "path" -> JString(DeltaCatalog.encodePath(rel)),
         "size" -> JLong(size),
         "partitionValues" -> JObject(pv.map { case (k, v) => k -> (JString(v): JValue) }.toList),
+        "modificationTime" -> JLong(mtime),
         "dataChange" -> JBool(true))
       val fields = statsByPath.get(new Path(tablePath, rel).toString)
         .fold(base)(s => base :+ ("stats" -> (JString(s): JValue)))

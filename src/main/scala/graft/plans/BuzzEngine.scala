@@ -85,8 +85,10 @@ final class BuzzEngine(
   /** DRY-RUN plan introspection: validate and plan the query WITHOUT
     * executing it, and report what execution would do — catalog identity,
     * format, file counts at each pruning stage (partition filter, then
-    * zone-map footer pruning), bytes to read, and both derived output
-    * schemas as DDL. This is the "what will this query touch" answer an
+    * zone-map footer pruning), bytes to read, both derived output
+    * schemas as DDL, and whether the reduce aggregates the map output
+    * again or only projects it (see [[Statement.collapseUniqueGroups]]).
+    * This is the "what will this query touch" answer an
     * operator wants BEFORE committing a 100 TB scan, and it exercises the
     * exact planner path `run` uses (same validation errors surface).
     * Everything here is metadata-sized — no data file is opened except
@@ -115,7 +117,8 @@ final class BuzzEngine(
       ("reduce" ->
         ("name" -> p.reduceStep.name) ~
         ("sql" -> p.reduceStep.sql) ~
-        ("output_schema" -> p.reduceOutputSchema.toDDL))
+        ("output_schema" -> p.reduceOutputSchema.toDDL) ~
+        ("reaggregates" -> p.reduceReaggregates))
     JsonMethods.compact(JsonMethods.render(obj))
   }
 

@@ -1,7 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.types.StructType
 
@@ -10,7 +10,10 @@ import graft.sources.{SizedFile, SplittableCatalog}
 
 /** The validated distributed plan: which files the map stage reads (and
   * how many survived partition pruning, before zone pruning), the two
-  * steps and their parsed statements, and the derived output schemas.
+  * steps and their parsed statements, the derived output schemas, and
+  * whether the bound reduce still aggregates on its own (false when it
+  * only projects, including a re-aggregation collapsed by
+  * [[Statement.collapseUniqueGroups]]).
   * Reference: `DistributedPlan` at
   * `/root/reference/code/src/services/fuse/query_planner.rs:17-44`. Spark
   * owns zone/worker assignment, so zones collapse to a partition count. */
@@ -23,9 +26,11 @@ final case class DistributedPlan(
     map: Statement,
     reduce: Statement,
     mapOutputSchema: StructType,
-    reduceOutputSchema: StructType)
+    reduceOutputSchema: StructType,
+    reduceReaggregates: Boolean)
 
-/** [[DistributedPlan]] minus the derived output schemas: everything the
+/** [[DistributedPlan]] minus what binding derives (the output schemas and
+  * whether the reduce re-aggregates): everything the
   * EXECUTION path needs. `run` binds the statements to the real source
   * anyway, so deriving schemas from empty relations first would analyze
   * each statement twice per query — a fixed cost the two-stage-overhead
@@ -64,8 +69,11 @@ final class QueryPlanner(catalogs: Map[String, SplittableCatalog]) {
     val v = validateAndPrune(spark, query)
     val mapDf = v.map.bind(spark, LocalRelation(DataTypeUtils.toAttributes(v.catalog.fullSchema)))
     val reduceDf = v.reduce.bind(spark, mapDf.queryExecution.analyzed)
+    def aggregates(df: DataFrame) =
+      df.queryExecution.analyzed.collect { case a: Aggregate => a }.size
     DistributedPlan(v.catalog, v.files, v.filesAfterPartition, v.mapStep, v.reduceStep,
-      v.map, v.reduce, mapDf.schema, reduceDf.schema)
+      v.map, v.reduce, mapDf.schema, reduceDf.schema,
+      reduceReaggregates = aggregates(reduceDf) > aggregates(mapDf))
   }
 
   /** Structural validation + file pruning — every plan-SHAPE error (step

@@ -441,13 +441,27 @@ object StaticCatalog {
       partitionValues: Map[String, Seq[String]] = Map.empty,
       format: String = "parquet",
       declaredSchema: Option[StructType] = None,
-      readerOptions: Map[String, String] = Map.empty): StaticCatalog = {
+      readerOptions: Map[String, String] = Map.empty): StaticCatalog =
+    overFiles(spark, name,
+      paths.map { p =>
+        val st = FsUtil.status(spark, p)
+        SizedFile(p, st.getLen, partitionValues.getOrElse(p, Nil), st.getModificationTime)
+      },
+      partitionColumns, format, declaredSchema, readerOptions)
+
+  /** Catalog over files whose lengths and modification times are already
+    * known; `listed` is evaluated only once the format can be read. */
+  private def overFiles(
+      spark: SparkSession,
+      name: String,
+      listed: => Seq[SizedFile],
+      partitionColumns: Seq[String],
+      format: String,
+      declaredSchema: Option[StructType],
+      readerOptions: Map[String, String]): StaticCatalog = {
     require(SupportedFormats.contains(format),
       s"unsupported catalog format '$format'")
-    lazy val files = paths.map { p =>
-      val st = FsUtil.status(spark, p)
-      SizedFile(p, st.getLen, partitionValues.getOrElse(p, Nil), st.getModificationTime)
-    }
+    lazy val files = listed
     val (schema, nanosCols, ntzCols) = declaredSchema match {
       case Some(s) => (s, Nil: Seq[String], Nil: Seq[String])
       case None => format match {
@@ -506,13 +520,13 @@ object StaticCatalog {
         s"'$uri' is Hive-partitioned (${discoveredCols.mkString(",")}); " +
           "explicit partitionColumns conflict with the discovered layout")
     val cols = if (discoveredCols.nonEmpty) discoveredCols else partitionColumns
-    val valuesFor: String => Seq[String] =
-      if (discoveredCols.nonEmpty) {
-        val byPath = found.toMap
-        p => byPath(p).map(_._2)
-      } else partitionValuesFor
-    overLocalFiles(spark, name, found.map(_._1), cols,
-      found.map { case (p, _) => p -> valuesFor(p) }.toMap,
-      format, declaredSchema, readerOptions)
+    // the listing already carries each file's length and mtime: no stat
+    val files = found.map { case (st, parts) =>
+      val p = st.getPath.toString
+      SizedFile(p, st.getLen,
+        if (discoveredCols.nonEmpty) parts.map(_._2) else partitionValuesFor(p),
+        st.getModificationTime)
+    }
+    overFiles(spark, name, files, cols, format, declaredSchema, readerOptions)
   }
 }

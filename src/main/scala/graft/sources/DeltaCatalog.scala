@@ -92,6 +92,15 @@ object DeltaCatalog {
       versionAsOf: Option[Long] = None): Map[String, String] =
     replay(spark, tablePath, versionAsOf).stats.toMap
 
+  /** Each live file's `add.modificationTime` keyed by RAW log path, at
+    * `versionAsOf` (None = head); a file whose add carried none is absent.
+    * What restore and clone re-adds carry, so a file keeps its identity
+    * in the metadata cache. */
+  private[graft] def mtimesByRaw(
+      spark: SparkSession, tablePath: String,
+      versionAsOf: Option[Long] = None): Map[String, Long] =
+    replay(spark, tablePath, versionAsOf).mtimes.toMap
+
   /** The table's metaData.configuration at `versionAsOf` — the writer
     * obligations (delta.appendOnly, delta.constraints.*) the checkpoint
     * must persist or commit cleaning would silently disarm the writer

@@ -51,10 +51,10 @@ object FsUtil {
   def exists(spark: SparkSession, path: String): Boolean =
     fs(spark, path).exists(new Path(path))
 
-  def isDirectory(spark: SparkSession, path: String): Boolean = {
-    val f = fs(spark, path)
-    f.exists(new Path(path)) && f.getFileStatus(new Path(path)).isDirectory
-  }
+  /** One `getFileStatus`: false when `path` is missing or a file. */
+  def isDirectory(spark: SparkSession, path: String): Boolean =
+    try status(spark, path).isDirectory
+    catch { case _: java.io.FileNotFoundException => false }
 
   def listStatus(spark: SparkSession, dir: String): Seq[FileStatus] =
     fs(spark, dir).listStatus(new Path(dir)).toSeq
@@ -157,22 +157,22 @@ object FsUtil {
   /** Recursively collect the leaf data files under `dir` — by the
     * format's extension, so ".snappy.orc" and friends still match — with
     * the Hive `col=value` directory segments above each file, in listing
-    * order. The ONE walk behind both catalog discovery and zone-map
-    * manifest building, so the two can never disagree about which files
-    * are data. */
+    * order. Each file comes with the status its listing returned (length,
+    * modification time), so callers never stat a listed file again. The
+    * ONE walk behind both catalog discovery and zone-map manifest
+    * building, so the two can never disagree about which files are data. */
   def walkDataFiles(spark: SparkSession, dir: String, ext: String)
-      : Seq[(String, Seq[(String, String)])] = {
+      : Seq[(FileStatus, Seq[(String, String)])] = {
     val HivePart = "([^=/]+)=([^/]*)".r
-    def walk(d: String, parts: Seq[(String, String)]): Seq[(String, Seq[(String, String)])] =
+    def walk(d: String, parts: Seq[(String, String)]): Seq[(FileStatus, Seq[(String, String)])] =
       listStatus(spark, d).sortBy(_.getPath.getName).flatMap { st =>
-        val child = st.getPath.toString
         val name = st.getPath.getName
         if (isHiddenName(name)) Nil
         else if (st.isDirectory) name match {
-          case HivePart(k, v) => walk(child, parts :+ (k -> v))
-          case _              => walk(child, parts)
+          case HivePart(k, v) => walk(st.getPath.toString, parts :+ (k -> v))
+          case _              => walk(st.getPath.toString, parts)
         }
-        else if (name.endsWith(ext)) Seq(child -> parts)
+        else if (name.endsWith(ext)) Seq(st -> parts)
         else Nil
       }
     walk(dir, Nil)

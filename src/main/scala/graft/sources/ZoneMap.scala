@@ -295,12 +295,14 @@ object ZoneMap {
       spark: SparkSession, tableDir: String, columns: Seq[String],
       format: String = "parquet"): String = {
     require(columns.nonEmpty, "need at least one column to manifest")
-    val paths = FsUtil.walkDataFiles(spark, tableDir, s".$format").map(_._1)
-    require(paths.nonEmpty, s"no $format files under '$tableDir'")
-    // stat before reading: a rewrite in between pins the NEW range to the
-    // OLD identity, which is harmless (any read sees the new bytes); the
-    // reverse order would pin the old range to the new identity
-    val ids = paths.map(p => p -> FsUtil.status(spark, p)).toMap
+    val listed = FsUtil.walkDataFiles(spark, tableDir, s".$format").map(_._1)
+    require(listed.nonEmpty, s"no $format files under '$tableDir'")
+    // identities come from the listing, taken before reading: a rewrite in
+    // between pins the NEW range to the OLD identity, which is harmless
+    // (any read sees the new bytes); the reverse order would pin the old
+    // range to the new identity
+    val paths = listed.map(_.getPath.toString)
+    val ids = listed.map(st => st.getPath.toString -> st).toMap
     val rows = readEach(spark, paths)(footerReader(format)).flatMap { case (p, footer) =>
       columns.map { c =>
         val (mn, mx) = footer.fold(Unknown)(_.range(c))

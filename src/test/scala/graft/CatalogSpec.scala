@@ -480,6 +480,26 @@ class CatalogSpec extends AnyFunSuite {
     assert(out == Map("x" -> 2L, "y" -> 1L))
   }
 
+  test("a warm Static resolve of a 24-file Hive directory stats no listed file") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+    val local = tmpDir("graft_stat_once")
+    // one row per file: 12 months x 2 files
+    (0L until 24L).map(i => (i, f"2024-${i / 2 + 1}%02d")).toDF("id", "month")
+      .write.option("maxRecordsPerFile", 1L).partitionBy("month").parquet(s"$local/t")
+    val uri = s"countfs://$local/t"
+    val cold = StaticCatalog.overPath(spark, "counted", uri)
+    assert(cold.files.size == 24 && cold.partitionColumns == Seq("month"))
+    val before = CountingFileSystem.statCalls.get()
+    // the per-request resolve: the inferred schema is cached, the files
+    // are listed again and their lengths and mtimes taken from the listing
+    val warm = StaticCatalog.overPath(spark, "counted", uri)
+    val stats = CountingFileSystem.statCalls.get() - before
+    assert(warm.files == cold.files)
+    assert(warm.files.forall(f => f.modificationTime > 0 && f.length > 0))
+    assert(stats == 1, s"expected only the directory check, got $stats getFileStatus calls")
+  }
+
   test("StaticCatalog.overPath declares non-session timestamp columns as usable timestamps") {
     // the driver-generated events.ts has shipped both as TIMESTAMP(NANOS)
     // and as TIMESTAMP(MICROS, isAdjustedToUTC=false) (NTZ); either way the

@@ -100,7 +100,8 @@ class DeltaConcurrencySpec extends AnyFunSuite {
       .findFirst().get()
     val rel = s"pinned-${java.util.UUID.randomUUID}.parquet"
     Files.copy(part, Paths.get(dir, rel))
-    val adds = Seq((rel, Files.size(Paths.get(dir, rel)), Seq.empty[(String, String)]))
+    val adds = Seq(Sinks.AddedFile(rel, Files.size(Paths.get(dir, rel)), Nil,
+      Files.getLastModifiedTime(Paths.get(dir, rel)).toMillis))
     val schema = DeltaCatalog.fromDeltaLog(spark, dir, "pin_schema").schema
     // intermediate commit: a DELETE removes the rewrite's input file
     Sinks.deltaDeleteWhere(spark, dir, "id <= 9")

@@ -511,19 +511,20 @@ class DeltaProtocolSpec extends AnyFunSuite {
   test("checkpoint add entries carry the spec-required dataChange=false and modificationTime") {
     val dir = tmpDir("cp_add_fields")
     twoFileTable(dir)
-    val before = System.currentTimeMillis()
     val v = Sinks.deltaCheckpoint(spark, dir)
     val adds = spark.read
       .parquet(f"$dir/_delta_log/$v%020d.checkpoint.parquet")
       .where(col("add").isNotNull)
-      .select(col("add.dataChange"), col("add.modificationTime"))
+      .select(col("add.dataChange"), col("add.modificationTime"), col("add.path"))
       .collect()
     assert(adds.nonEmpty)
     adds.foreach { r =>
       assert(!r.getBoolean(0), "checkpoint add must carry dataChange=false")
+      // each file's own time, so a checkpoint keeps its cache identity
       val mt = r.getLong(1)
-      assert(mt >= before && mt <= System.currentTimeMillis(),
-        s"modificationTime $mt not a plausible checkpoint-time stamp")
+      val onDisk = FsUtil.status(spark,
+        s"$dir/${DeltaCatalog.decodePath(r.getString(2))}").getModificationTime
+      assert(mt > 0 && mt == onDisk, s"modificationTime $mt is not the file's own ($onDisk)")
     }
   }
 

@@ -97,6 +97,46 @@ class DeltaStatsSpec extends AnyFunSuite {
       "checkpoint-seeded catalogs must prune without footer IO")
   }
 
+  test("Delta adds carry each file's mtime, and a checkpoint keeps every file's identity") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val dir = tmpDir("graft_dmtime")
+    writeClustered(dir)
+    val appended = DeltaCatalog.fromDeltaLog(spark, dir, "dm")
+    assert(appended.files.size == 4)
+    appended.files.foreach { f =>
+      assert(f.modificationTime > 0 &&
+        f.modificationTime == FsUtil.status(spark, f.key).getModificationTime, f.key)
+    }
+    // a restore re-adds a removed file under the time its target version recorded
+    val restored = tmpDir("graft_drestore")
+    writeClustered(restored)
+    val atV0 = DeltaCatalog.fromDeltaLog(spark, restored, "dr").files.map(_.id).toSet
+    Sinks.deltaDeleteWhere(spark, restored, "id < 100")
+    Sinks.deltaRestore(spark, restored, 0L)
+    assert(DeltaCatalog.fromDeltaLog(spark, restored, "dr").files.map(_.id).toSet == atV0)
+    // without add.stats, zone ranges come from footers, cached per file
+    // identity; a foreign writer's table looks like this
+    val commit = s"$dir/_delta_log/${"0" * 20}.json"
+    val stripped = FsUtil.readString(spark, commit).linesIterator.filter(_.nonEmpty)
+      .map(l => JsonMethods.compact(JsonMethods.render(
+        JsonMethods.parse(l).removeField(_._1 == "stats"))))
+    FsUtil.writeString(spark, commit, stripped.mkString("", "\n", "\n"))
+    MetaCache.reset()
+    val sql = "SELECT count(*) AS n FROM dm WHERE id BETWEEN 0 AND 99"
+    val before = DeltaCatalog.fromDeltaLog(spark, dir, "dm")
+    val cold = ZoneMap.footerReads.get()
+    assert(ZoneMap.pruneForQuery(spark, before.schema, before.files, sql).size == 1)
+    assert(ZoneMap.footerReads.get() > cold, "a stats-less table prunes from footers")
+    Sinks.deltaCheckpoint(spark, dir, cleanCommits = true)
+    val after = DeltaCatalog.fromDeltaLog(spark, dir, "dm")
+    assert(after.files.map(_.id).toSet == before.files.map(_.id).toSet)
+    val warm = ZoneMap.footerReads.get()
+    assert(ZoneMap.pruneForQuery(spark, after.schema, after.files, sql).size == 1)
+    assert(ZoneMap.footerReads.get() == warm,
+      "a checkpoint must not change the identities the zone ranges are cached under")
+  }
+
   test("a newer checkpoint with cleanCommits reaps superseded checkpoint files") {
     val dir = tmpDir("graft_dcp_gc")
     writeClustered(dir)

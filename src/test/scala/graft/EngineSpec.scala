@@ -439,6 +439,16 @@ class EngineSpec extends AnyFunSuite {
     assert(bytes.toLong > 0)
     assert((j \ "map" \ "output_schema").asInstanceOf[JString].s.toLowerCase.contains("s "))
     assert((j \ "reduce" \ "output_schema").asInstanceOf[JString].s.toLowerCase.contains("total"))
+    // a global reduce aggregates again; a reduce grouped on the map's own
+    // keys only projects the map output (the binder's collapse)
+    assert((j \ "reduce" \ "reaggregates") == JBool(true))
+    val grouped = JsonMethods.parse(eng.explainJson(spark,
+      """{"steps": [
+        |  {"sql": "SELECT id % 4 AS g, sum(v) AS s FROM et GROUP BY id % 4",
+        |   "name": "m", "step_type": "HBee"},
+        |  {"sql": "SELECT g, sum(s) AS s FROM m GROUP BY g", "name": "r", "step_type": "HComb"}],
+        | "capacity": {"zones": 1}, "catalogs": []}""".stripMargin))
+    assert((grouped \ "reduce" \ "reaggregates") == JBool(false))
     // a planner error surfaces from explain exactly as from run
     intercept[BuzzException.PlanError] {
       eng.explainJson(spark,

@@ -2,7 +2,7 @@ package graft
 
 import java.net.URI
 
-import org.apache.hadoop.fs.RawLocalFileSystem
+import org.apache.hadoop.fs.{FileStatus, FilterFileSystem, Path, RawLocalFileSystem}
 
 /** A local-disk-backed Hadoop FileSystem registered under a remote-looking
   * scheme (`mocks3://`). The catalog layer claims to work over any Hadoop
@@ -14,4 +14,21 @@ import org.apache.hadoop.fs.RawLocalFileSystem
 class MockRemoteFileSystem extends RawLocalFileSystem {
   override def getScheme: String = "mocks3"
   override def getUri: URI = URI.create("mocks3:///")
+}
+
+/** Local disk under the `countfs://` scheme behind a `FilterFileSystem`
+  * that counts `getFileStatus` calls — on `s3a://` each one is a HEAD
+  * request, so a spec can bound how many a catalog resolution makes. */
+class CountingFileSystem extends FilterFileSystem(new RawLocalFileSystem {
+  override def getScheme: String = "countfs"
+  override def getUri: URI = URI.create("countfs:///")
+}) {
+  override def getFileStatus(f: Path): FileStatus = {
+    CountingFileSystem.statCalls.incrementAndGet()
+    super.getFileStatus(f)
+  }
+}
+
+object CountingFileSystem {
+  val statCalls = new java.util.concurrent.atomic.AtomicLong
 }
