@@ -232,7 +232,7 @@ case class WordShingles(child: Expression, n: Int, distinct: Boolean = true)
     ShingleKernel.shingles(input.asInstanceOf[UTF8String], n, distinct)
 
   // real codegen (a static kernel call on the already-unpacked UTF8String)
-  // rather than CodegenFallback. MEASURED (CodegenBench, sf0.1 documents,
+  // rather than CodegenFallback. MEASURED (SURVEY §8, sf0.1 documents,
   // min-of-7): 0.186 s codegen vs 0.182 s fallback for the shingle stage,
   // 0.213 vs 0.224 s for shingles→band-keys — within ±5% run noise both
   // ways, because the per-document kernel work dominates the call path.
@@ -242,31 +242,6 @@ case class WordShingles(child: Expression, n: Int, distinct: Boolean = true)
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.ShingleKernel.shingles($c, $n, $distinct);")
 
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-/** CodegenFallback twins of [[WordShingles]] / [[MinHashBandKeys]], kept
-  * ONLY as the baseline arm of the measured comparison in
-  * [[graft.CodegenBench]] — identical kernels, differing solely in how the
-  * call reaches them (boxed `eval` via the fallback path vs a static call
-  * inside the generated stage). Never used by an operator. */
-private[graft] case class WordShinglesFallback(child: Expression, n: Int, distinct: Boolean = true)
-    extends UnaryExpression with CodegenFallback with graftshim.GraftExpectsInputTypes {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "word_shingles_fallback"
-  override def graftInputTypes: Seq[Seq[DataType]] = Seq(Seq(StringType))
-  override def nullSafeEval(input: Any): Any =
-    ShingleKernel.shingles(input.asInstanceOf[UTF8String], n, distinct)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
-}
-
-private[graft] case class MinHashBandKeysFallback(child: Expression, numHashes: Int, bands: Int)
-    extends UnaryExpression with CodegenFallback with graftshim.GraftExpectsInputTypes {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "minhash_band_keys_fallback"
-  override def graftInputTypes: Seq[Seq[DataType]] = Seq(Seq(ArrayType(StringType)))
-  override def nullSafeEval(input: Any): Any =
-    MinHashCore.bandKeys(input.asInstanceOf[ArrayData], numHashes, bands)
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
 }
 

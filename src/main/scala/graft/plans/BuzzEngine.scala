@@ -2,7 +2,7 @@ package graft.plans
 
 import java.util.concurrent.atomic.LongAdder
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import graft.model.{BuzzException, BuzzQuery}
@@ -141,12 +141,13 @@ final class BuzzEngine(
       val rows =
         try df.collect()
         catch { case e: Throwable => throw attributeWorkerFailure(e, p.files.map(_.key)) }
-      // the listener bus is async: wait until task-end events stop arriving
+      // the listener bus is async: wait until task-end and stage-completed
+      // events stop arriving
       var last = -1L
       var stableChecks = 0
       var waitedMs = 0
       while (stableChecks < 2 && waitedMs < 2000) {
-        val t = listener.tasks.sum()
+        val t = listener.tasks.sum() + listener.stages.sum()
         if (t == last) stableChecks += 1 else { stableChecks = 0; last = t }
         Thread.sleep(50)
         waitedMs += 50
@@ -213,8 +214,11 @@ final class BuzzEngine(
 /** Per-query observability, parity with the reference's per-worker metrics
   * (`/root/reference/code/src/services/hbee/hbee_service.rs:45-52`:
   * query_duration, downloaded_bytes, processed_bytes). Spark already tracks
-  * these per task; this listener aggregates them per query run. */
+  * these per task; this listener aggregates them per query run, and counts
+  * the jobs started and the stages run (a skipped stage never completes). */
 final class QueryMetricsListener extends SparkListener {
+  val jobs = new LongAdder
+  val stages = new LongAdder
   val bytesRead = new LongAdder
   val recordsRead = new LongAdder
   val shuffleBytesWritten = new LongAdder
@@ -223,6 +227,11 @@ final class QueryMetricsListener extends SparkListener {
   val taskTimeMs = new LongAdder
   val tasks = new LongAdder
   val failedTasks = new LongAdder
+
+  override def onJobStart(jobStart: SparkListenerJobStart): Unit = jobs.increment()
+
+  override def onStageCompleted(stageCompleted: SparkListenerStageCompleted): Unit =
+    stages.increment()
 
   override def onTaskEnd(taskEnd: SparkListenerTaskEnd): Unit = {
     // per-worker failure observability (collector.rs:39-62 parity): count
@@ -246,6 +255,8 @@ final class QueryMetricsListener extends SparkListener {
   }
 
   def summary: Map[String, Long] = Map(
+    "jobs" -> jobs.sum(),
+    "stages" -> stages.sum(),
     "downloaded_bytes" -> bytesRead.sum(),
     "processed_rows" -> recordsRead.sum(),
     "shuffle_bytes" -> shuffleBytesWritten.sum(),

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkStrategy
 
 /** Bridge into Spark's `private[sql]` DataFrame-from-LogicalPlan
   * constructor — the same visibility pattern as [[StreamingBridge]] /
@@ -13,4 +14,15 @@ object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Adds `strategy` to the extensions `spark` was built with, unless they
+    * already build it. A session's planner asks its extensions for their
+    * strategies at every planning, and `newSession()` hands the same
+    * extensions to every session it forks, so `spark` and its forks all
+    * plan with `strategy` from the next query on. */
+  def injectStrategyOnce(spark: SparkSession, strategy: SparkStrategy): Unit = {
+    val ext = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].extensions
+    if (!ext.buildPlannerStrategies(spark).contains(strategy))
+      ext.injectPlannerStrategy(_ => strategy)
+  }
 }
