@@ -815,15 +815,13 @@ object Sinks {
     val remDvs = removes.flatMap(raw => preDvs.get(raw).map(dv =>
       abs(raw) -> DeletionVectors.resolve(tablePath, dv))).toMap
     val remCat = cat.withDeletionVectors(remDvs)
-    val removedRows =
-      if (removes.isEmpty) remCat.read(spark, Nil)
-      else remCat.read(spark, removes.map { raw =>
-        pre.get(raw) match {
-          case Some((size, pv)) => sized(raw, size, pv)
-          case None => throw new BuzzException.ExecutionError(
-            s"commit $version removes $raw which is not live at ${version - 1}")
-        }
-      })
+    val removedRows = remCat.read(spark, removes.map { raw =>
+      pre.get(raw) match {
+        case Some((size, pv)) => sized(raw, size, pv)
+        case None => throw new BuzzException.ExecutionError(
+          s"commit $version removes $raw which is not live at ${version - 1}")
+      }
+    })
     Joins.snapshotDiff(removedRows, addedRows, keyCols, compareCols)
   }
 
@@ -1155,11 +1153,9 @@ object Sinks {
     * number of contiguous commits — under the era catalog's schema plus
     * `_change_type`, with `_commit_version` joined per file. Rides the
     * SAME catalog read machinery as data files (declared physical names,
-    * logical surfacing, Hive-layout single-scan): cdc files land under
-    * `_change_data/<k=v dirs>/` in exactly the table's partition layout,
-    * so a run reads as ONE FileScan however many commits OR partition
-    * tuples it spans (pathological partition values fall back to the
-    * per-tuple union, like any catalog read). */
+    * logical surfacing, one FileScan over the given files), so a run
+    * reads as ONE FileScan however many commits OR partition tuples it
+    * spans. */
   private def readChangeData(
       spark: org.apache.spark.sql.SparkSession, tablePath: String,
       cat: graft.sources.StaticCatalog,

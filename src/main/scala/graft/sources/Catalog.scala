@@ -1,8 +1,16 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, expr, lit}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, PartitionDirectory, csv, json, orc, parquet}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.BuzzException
 
@@ -20,6 +28,13 @@ import graft.model.BuzzException
 final case class SizedFile(
     key: String, length: Long, partitionValues: Seq[String], modificationTime: Long = 0L) {
   def id: MetaCache.FileId = MetaCache.FileId(key, length, modificationTime)
+
+  /** This file as Spark's reader would stat it: the path qualified against
+    * its file system, with the catalog's length and modification time. */
+  private[sources] def status(conf: Configuration): FileStatus = {
+    val p = new Path(key)
+    new FileStatus(length, false, 0, 0L, modificationTime, p.getFileSystem(conf).makeQualified(p))
+  }
 }
 
 /** A catalog that can list its files as a queryable table and be split into
@@ -92,9 +107,11 @@ trait SplittableCatalog {
     * logical ones; unmapped catalogs skip all of it. */
   final def physicalNames: Map[String, String] = ColumnMapping.mapping(schema)
 
-  /** Full table schema including partition columns, as workers see it. */
+  /** Full table schema as workers see it and [[read]] surfaces it: the data
+    * columns made nullable, as Spark reads any file, then the partition
+    * columns as nullable strings. */
   final def fullSchema: StructType =
-    partitionColumns.foldLeft(schema)((s, p) => s.add(p, StringType, nullable = false))
+    partitionColumns.foldLeft(PlanBridge.asNullable(schema))(_.add(_, StringType))
 
   /** The catalog's "table of files": one row per file with columns
     * (key string, length long, <partition cols> string...), as a local
@@ -130,25 +147,8 @@ trait SplittableCatalog {
         files.filter(sf => surviving.contains(sf.key))
     }
 
-  /** Read the given files as one DataFrame with partition columns appended.
-    *
-    * Partitioned catalogs whose files sit in a consistent Hive layout
-    * (`.../col=value/file.parquet` under one root — the layout every sink,
-    * Delta table, and discovered directory catalog produces) read through
-    * Spark's native partitioned datasource: ONE FileScan regardless of
-    * partition-tuple count, with partition values parsed from the paths.
-    * The alternative — one scan per partition tuple unioned together — is
-    * correct but its plan grows linearly with tuple count: at a real
-    * 100 TB layout with 10⁴–10⁵ directories, analysis/optimization of a
-    * 10⁴-branch union dominates, and per-group scans defeat cross-partition
-    * file packing.
-    *
-    * Files whose paths do NOT encode their declared partition values (an
-    * explicit catalog with arbitrary metadata values, empty values, or
-    * null-sentinel values whose surfaced form must stay the literal
-    * sentinel string) fall back to the per-tuple union; such catalogs are
-    * the explicit-file kind with few tuples.
-    */
+  /** Read the given files as ONE file scan over exactly these files, any
+    * layout ([[SelectedFileIndex]]), surfacing [[fullSchema]]. */
   final def read(spark: SparkSession, selected: Seq[SizedFile]): DataFrame =
     readInternal(spark, selected, withRowIndex = false, keepPath = false)
 
@@ -173,19 +173,10 @@ trait SplittableCatalog {
   private def readInternal(
       spark: SparkSession, selected: Seq[SizedFile], withRowIndex: Boolean,
       keepPath: Boolean): DataFrame = {
-    val outSchema =
-      if (withRowIndex) StructType(fullSchema.fields.toSeq ++ Seq(
-        StructField("__gfp", StringType), StructField("__gri", LongType)))
-      else if (keepPath) StructType(
-        fullSchema.fields.toSeq :+ StructField("__gfp", StringType))
-      else fullSchema
-    if (selected.isEmpty) {
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
-    }
     // ranged-read tuning for object-store catalogs (no-op for any other
     // scheme); all of a catalog's files share one scheme, so the first
     // decides
-    FsUtil.applyS3aTuning(spark, selected.head.key)
+    selected.headOption.foreach(f => FsUtil.applyS3aTuning(spark, f.key))
     // TIMESTAMP(NANOS) columns: declared TimestampType publicly, read as
     // epoch-nanos long, truncated to µs (integer DIV — double division loses
     // precision above 2^53 ns; DuckDB's ns→µs cast truncates identically).
@@ -206,40 +197,21 @@ trait SplittableCatalog {
       // columns; valid reads are unaffected.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     }
+    // partition columns are strings holding the catalog's values verbatim
+    // (the reference's strings-only model, README.md:113)
+    val partitionSchema = StructType(partitionColumns.map(StructField(_, StringType)))
+    val loaded = spark.baseRelationToDataFrame(HadoopFsRelation(
+      SelectedFileIndex(partitionSchema, selected)(spark.sessionState.newHadoopConf()),
+      partitionSchema, PlanBridge.asNullable(readSchema), bucketSpec = None,
+      StaticCatalog.SupportedFormats(format)(), formatOptions)(spark))
     // row identity (normalized path + row index) is attached RIGHT AFTER
-    // each load — `_metadata` is a scan-relation column and must be
-    // resolved before unions/projections hide it. Needed when this read
-    // either filters deletion vectors out or surfaces the identity itself.
-    val needsIdentity = withRowIndex || keepPath ||
-      selected.exists(f => deletionVectors.contains(f.key))
-    def withIdentity(df: DataFrame): DataFrame =
-      if (!needsIdentity) df
-      else df
-        .withColumn("__gfp", FsUtil.normalizePathCol(col("_metadata.file_path")))
+    // the load — `_metadata` is a scan-relation column and must be
+    // resolved before projections hide it. Needed when this read either
+    // filters deletion vectors out or surfaces the identity itself.
+    val scanned =
+      if (!withRowIndex && !keepPath && !selected.exists(f => deletionVectors.contains(f.key))) loaded
+      else loaded.withColumn("__gfp", FsUtil.normalizePathCol(col("_metadata.file_path")))
         .withColumn("__gri", col("_metadata.row_index"))
-    val scanned = hiveBasePath(selected) match {
-      case Some(base) =>
-        // partition columns are declared StringType in the user schema, so
-        // Spark skips type inference and keeps the reference's strings-only
-        // partition model (README.md:113); values are percent-decoded by
-        // Spark's own path parsing, matching the check in hiveBasePath
-        val withParts = StructType(readSchema.fields.toSeq ++
-          partitionColumns.map(p => StructField(p, StringType, nullable = true)))
-        withIdentity(spark.read.schema(withParts)
-          .option("basePath", base)
-          .options(formatOptions)
-          .format(format)
-          .load(selected.map(_.key): _*))
-      case None =>
-        val groups = selected.groupBy(_.partitionValues).toSeq.sortBy(_._1.mkString("/"))
-        groups.map { case (partVals, fs) =>
-          val base = withIdentity(spark.read.schema(readSchema)
-            .options(formatOptions).format(format).load(fs.map(_.key): _*))
-          partitionColumns.zip(partVals).foldLeft(base) { case (df, (p, v)) =>
-            df.withColumn(p, lit(v))
-          }
-        }.reduce(_.unionAll(_))
-    }
     // surface mapped columns under their LOGICAL names from here on —
     // ONE atomic select (sequential renames would collide when a rename
     // chain reuses a live name mid-fold, e.g. w→v alongside v→col-uuid)
@@ -275,9 +247,11 @@ trait SplittableCatalog {
     val converted = ntzColumns.foldLeft(nanosConverted) { (df, c) =>
       df.withColumn(c, col(c).cast(TimestampType))
     }
-    // enforce the catalog's declared column order (data cols, then
-    // partition cols) independent of the datasource's placement
-    val projected = converted.select(outSchema.fieldNames.map(col).toSeq: _*)
+    // the catalog's declared column order (data cols, then partition
+    // cols), then the identity columns this read surfaces
+    val identity =
+      if (withRowIndex) Seq("__gfp", "__gri") else if (keepPath) Seq("__gfp") else Nil
+    val projected = converted.select((fullSchema.fieldNames.toSeq ++ identity).map(col): _*)
     // the mapping is THIS table's storage detail — it must not ride the
     // output schema into downstream writers (a synced/derived table would
     // otherwise claim physical names its own files don't have)
@@ -300,36 +274,10 @@ trait SplittableCatalog {
     * declaration fails loudly rather than silently mis-assigning every
     * column. Headerless CSV declares `{"header": "false"}` in the
     * catalog's `options`. */
-  private def formatOptions: Map[String, String] = (format match {
+  private def formatOptions: Map[String, String] = CaseInsensitiveMap(format match {
     case "csv" => Map("header" -> "true", "enforceSchema" -> "false")
     case _     => Map.empty[String, String]
   }) ++ readerOptions
-
-  /** The common root of a consistent Hive layout, if every selected file's
-    * path ends in `col=value` segments (one per partition column, in order,
-    * directly above the file) whose percent-decoded values equal the file's
-    * declared partition values. Returns None — union fallback — otherwise. */
-  private def hiveBasePath(selected: Seq[SizedFile]): Option[String] = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName
-    if (partitionColumns.isEmpty) return None // single multi-file scan already
-    val nParts = partitionColumns.length
-    val bases = selected.map { f =>
-      val segs = f.key.split('/')
-      if (segs.length < nParts + 2) None // need root + partition dirs + file
-      else {
-        val partSegs = segs.slice(segs.length - 1 - nParts, segs.length - 1)
-        val consistent = partSegs.lazyZip(partitionColumns).lazyZip(f.partitionValues)
-          .forall { (seg, colName, value) =>
-            seg.startsWith(colName + "=") &&
-              unescapePathName(seg.substring(colName.length + 1)) == value &&
-              value.nonEmpty && value != DeltaCatalog.NullPartitionValue
-          }
-        if (consistent) Some(segs.take(segs.length - 1 - nParts).mkString("/"))
-        else None
-      }
-    }
-    bases.headOption.flatten.filter(b => bases.forall(_.contains(b)))
-  }
 }
 
 /** Compiled-in static file list, parity with
@@ -375,7 +323,7 @@ object StaticCatalog {
     import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
     import org.apache.parquet.schema.Type
     val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path),
+      HadoopInputFile.fromPath(new Path(path),
         spark.sessionState.newHadoopConf()))
     val footer = try reader.getFooter finally reader.close()
     import scala.jdk.CollectionConverters._
@@ -403,20 +351,24 @@ object StaticCatalog {
     (nanos, ntz, required)
   }
 
-  /** (schema, nanos columns, NTZ columns) of a parquet or ORC file. */
+  /** (schema, nanos columns, NTZ columns) of a parquet or ORC file, inferred
+    * by its file format from its known status — a name, never a glob
+    * (`a[1].parquet` is one file) — and made nullable as Spark's reader does. */
   private def infer(
       spark: SparkSession, format: String,
-      path: String): (StructType, Seq[String], Seq[String]) =
-    if (format == "orc") (spark.read.orc(path).schema, Nil, Nil) // self-describing footer
+      file: SizedFile): (StructType, Seq[String], Seq[String]) = {
+    def inferred = PlanBridge.asNullable(SupportedFormats(format)().inferSchema(
+      spark, Map.empty, Seq(file.status(spark.sessionState.newHadoopConf())))
+      .getOrElse(throw new BuzzException.BadRequest(s"cannot infer a schema from '${file.key}'")))
+    if (format == "orc") (inferred, Nil, Nil) // self-describing footer
     else {
       // tolerate TIMESTAMP(NANOS) columns during inference (read as
       // long), then re-declare them TimestampType backed by the
       // catalog's conversion
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val (nanos, ntz, required) = footerMeta(spark, path)
-      val inferred = spark.read.parquet(path).schema
+      val (nanos, ntz, required) = footerMeta(spark, file.key)
       (StructType(inferred.fields.map { f0 =>
-        // Spark widens every inferred field to nullable; restore the
+        // inference widens every field to nullable; restore the
         // footer's repetition so the inferred declaration round-trips
         // through the strict nullability check (reference parity)
         val f = f0.copy(nullable = !required.contains(f0.name))
@@ -425,10 +377,14 @@ object StaticCatalog {
         else f
       }), nanos, ntz)
     }
+  }
 
-  /** Formats a Static catalog can declare; parquet is the default and the
-    * only one the reference's engine reads. */
-  val SupportedFormats: Set[String] = Set("parquet", "orc", "csv", "json")
+  /** Formats a Static catalog can declare, each with the Spark file format
+    * it is read through; parquet is the default and the only one the
+    * reference's engine reads. */
+  val SupportedFormats: Map[String, () => FileFormat] = Map(
+    "parquet" -> (() => new parquet.ParquetFileFormat), "orc" -> (() => new orc.OrcFileFormat),
+    "csv" -> (() => new csv.CSVFileFormat), "json" -> (() => new json.JsonFileFormat))
 
   /** Catalog over explicit parquet paths, inferring the schema from the
     * first file; file lengths and modification times come from the
@@ -472,7 +428,7 @@ object StaticCatalog {
         // a file rewritten in place is inferred afresh.
         case "parquet" | "orc" =>
           MetaCache.getOrLoad(MetaCache.Inferred(format, files.head.id))(
-            infer(spark, format, files.head.key))(
+            infer(spark, format, files.head))(
             v => 256L + 128L * v._1.length)
         case other =>
           // inferring csv/json schemas requires a DATA scan, which catalog
@@ -529,4 +485,42 @@ object StaticCatalog {
     }
     overFiles(spark, name, files, cols, format, declaredSchema, readerOptions)
   }
+}
+
+/** The files a catalog read selected, as the `FileIndex` of ONE Spark file
+  * scan: these files with the lengths and mtimes the catalog holds, grouped
+  * by their partition values taken literally. Nothing is listed, stat'd,
+  * globbed or parsed out of a path, so every layout plans the same scan —
+  * as the reference's HBee scans exactly the file descriptor it is handed
+  * (`from_proto.rs:10-34`). Equal indexes select equal files, so two reads
+  * of the same files share cached and reused plans. */
+private[sources] final case class SelectedFileIndex(
+    partitionSchema: StructType, files: Seq[SizedFile])(conf: Configuration)
+  extends FileIndex {
+
+  private lazy val statuses = files.map(_.status(conf))
+
+  private lazy val directories: Seq[PartitionDirectory] = {
+    val byValues = files.zip(statuses).groupBy(_._1.partitionValues)
+    files.map(_.partitionValues).distinct.map { values =>
+      PartitionDirectory(InternalRow.fromSeq(values.map(UTF8String.fromString)),
+        byValues(values).map(_._2).toArray)
+    }
+  }
+
+  def rootPaths: Seq[Path] = statuses.map(_.getPath)
+  def inputFiles: Array[String] = rootPaths.map(_.toString).toArray
+  def sizeInBytes: Long = files.map(_.length).sum
+  def refresh(): Unit = ()
+
+  /** Spark drops partition filters after a file scan, so the index applies
+    * them to each directory's values, as Spark's own indexes do. */
+  def listFiles(
+      partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    partitionFilters.reduceOption(And).fold(directories) { filter =>
+      val keep = Predicate.createInterpreted(filter.transform { case a: AttributeReference =>
+        BoundReference(partitionSchema.fieldNames.indexOf(a.name), StringType, nullable = true)
+      })
+      directories.filter(d => keep.eval(d.values))
+    }
 }

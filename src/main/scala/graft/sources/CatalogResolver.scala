@@ -29,7 +29,7 @@ object CatalogResolver {
           if (!StaticCatalog.SupportedFormats.contains(format))
             throw new BuzzException.BadRequest(
               s"unknown format '$format' for catalog '${r.name}' " +
-                s"(expected one of ${StaticCatalog.SupportedFormats.toSeq.sorted.mkString(", ")})")
+                s"(expected one of ${StaticCatalog.SupportedFormats.keys.toSeq.sorted.mkString(", ")})")
           // `StructType.fromDDL` pays a full parse per call and catalogs
           // re-resolve per query (the reference re-configures per request
           // too), so a schema string parses once while the cache holds it;

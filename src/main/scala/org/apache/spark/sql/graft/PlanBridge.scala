@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.SparkStrategy
+import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark's `private[sql]` DataFrame-from-LogicalPlan
   * constructor — the same visibility pattern as [[StreamingBridge]] /
@@ -14,6 +15,11 @@ object PlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** `schema` with every field nullable, nested ones included: what
+    * Spark's own `DataSource` makes of a file source's data schema
+    * (`StructType.asNullable` is `private[spark]`). */
+  def asNullable(schema: StructType): StructType = schema.asNullable
 
   /** Adds `strategy` to the extensions `spark` was built with, unless they
     * already build it. A session's planner asks its extensions for their

@@ -15,6 +15,22 @@ class CatalogSpec extends AnyFunSuite {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
+  /** `body`'s result and the number of Spark jobs started while it ran. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    org.apache.spark.TestListeners.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.TestListeners.drain(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   /** Write one small parquet file per partition value; returns catalog. */
   private def partitionedCatalog(): StaticCatalog = {
     val dir = tmpDir("graft_cat")
@@ -60,7 +76,6 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("partition pruning of a warm Static or Delta catalog starts no Spark job") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     import graft.model.{BuzzCapacity, BuzzQuery, BuzzStep, BuzzStepType}
     val deltaDir = tmpDir("graft_prune_jobs")
     graft.operators.Sinks.deltaAppend(
@@ -69,19 +84,7 @@ class CatalogSpec extends AnyFunSuite {
     val catalogs = Seq(
       partitionedCatalog() -> "month <= '2020/02'",
       DeltaCatalog.fromDeltaLog(spark, deltaDir, "pj") -> "g IN ('g0', 'g2')")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-    }
-    def jobsDuring[T](body: => T): (T, Int) = {
-      org.apache.spark.TestListeners.drain(spark.sparkContext)
-      val before = jobs.get
-      val out = body
-      org.apache.spark.TestListeners.drain(spark.sparkContext)
-      (out, jobs.get - before)
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try catalogs.foreach { case (cat, filter) =>
+    catalogs.foreach { case (cat, filter) =>
       cat.prune(spark, Some(filter)) // warm
       val (kept, started) = jobsDuring(cat.prune(spark, Some(filter)))
       assert(kept.size == 2 && cat.files.size == 3, s"kept ${kept.map(_.key)}")
@@ -97,7 +100,7 @@ class CatalogSpec extends AnyFunSuite {
       val (plan, planJobs) = jobsDuring(planner.validateAndPrune(spark, query))
       assert(plan.filesAfterPartition == 2 && plan.files.nonEmpty)
       assert(planJobs == 0, s"validateAndPrune on ${cat.name} started $planJobs job(s)")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
     // a filter that fails while the optimizer evaluates it on the driver
     // (ANSI cast of a non-numeric partition value) is still a PlanError
     intercept[BuzzException.PlanError] {
@@ -119,6 +122,56 @@ class CatalogSpec extends AnyFunSuite {
     val df = cat.read(spark, Nil)
     assert(df.count() == 0)
     assert(df.schema.fieldNames.toSeq == Seq("data_col", "month"))
+  }
+
+  test("building a read of 48 files and its physical plan starts no Spark job") {
+    // above Spark's parallel-listing threshold (32 paths) a read that hands
+    // Spark bare paths runs a listing job; the catalog's own list needs none
+    val local = tmpDir("graft_no_listing")
+    (0L until 48L).map(i => (i, i * 10, f"m${i / 4}%02d")).toDF("id", "v", "month")
+      .write.option("maxRecordsPerFile", 1L).partitionBy("month").parquet(s"$local/t")
+    val cat = StaticCatalog.overPath(spark, "wide", s"$local/t")
+    assert(cat.files.size == 48)
+    val (df, started) = jobsDuring {
+      val df = cat.read(spark, cat.files)
+      df.queryExecution.executedPlan
+      df
+    }
+    assert(started == 0, s"building the read started $started job(s)")
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.select("id", "v", "month").collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).sorted
+    assert(rows(df).length == 48)
+    assert(rows(df).toSeq == rows(spark.read.parquet(s"$local/t")).toSeq)
+  }
+
+  test("a file named with glob characters resolves and reads as itself") {
+    val dir = tmpDir("graft_glob")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "s").coalesce(1).write.parquet(s"$dir/staged")
+    val part = new java.io.File(s"$dir/staged").listFiles().filter(_.getName.endsWith(".parquet")).head
+    val named = Paths.get(dir, "a[1].parquet")
+    Files.move(part.toPath, named)
+    val cat = StaticCatalog.overPath(spark, "globbed", named.toString)
+    assert(cat.files.map(_.key) == Seq(named.toString))
+    assert(cat.schema.fieldNames.toSeq == Seq("id", "s"))
+    val got = cat.read(spark, cat.files).collect().map(r => (r.getLong(0), r.getString(1))).sorted
+    assert(got.toSeq == Seq((1L, "a"), (2L, "b")))
+  }
+
+  test("a selected file deleted after resolve fails the read at collect, not with a short answer") {
+    val local = tmpDir("graft_missing")
+    (0L until 4L).map(i => (i, i * 10)).toDF("id", "v")
+      .write.option("maxRecordsPerFile", 1L).parquet(s"$local/t")
+    val cat = StaticCatalog.overPath(spark, "gone", s"$local/t")
+    assert(cat.files.size == 4)
+    val victim = cat.files.head.key
+    assert(FsUtil.fs(spark, victim).delete(new org.apache.hadoop.fs.Path(victim), false))
+    // nothing is listed or stat'd while building: the missing file surfaces
+    // when its task opens it
+    val df = cat.read(spark, cat.files)
+    val e = intercept[org.apache.spark.SparkException](df.collect())
+    val causes = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(_.isInstanceOf[java.io.FileNotFoundException]),
+      s"expected a missing-file failure, got: ${e.getMessage.take(500)}")
   }
 
   test("schema verification rejects a file missing a declared column") {

@@ -457,6 +457,32 @@ class EngineSpec extends AnyFunSuite {
           |  {"sql": "SELECT x FROM m", "name": "r", "step_type": "HComb"}],
           | "capacity": {"zones": 1}, "catalogs": []}""".stripMargin)
     }
+    // explain binds what run binds: each output_schema is the DDL of the
+    // run's schema — over a Hive catalog whose footers declare REQUIRED
+    // columns, an explicit-values catalog and an empty selection
+    val hive = java.nio.file.Files.createTempDirectory("graft_explain_hive").toString
+    (0L until 40L).map(i => (i, i * 3, s"m${i % 2}")).toDF("id", "v", "month")
+      .write.mode("overwrite").partitionBy("month").parquet(hive)
+    val hiveCat = StaticCatalog.overPath(spark, "hv", hive)
+    assert(hiveCat.schema("id").nullable == false, "the fixture must declare a REQUIRED column")
+    val flatFiles = hiveCat.files.map(_.key)
+    val explicitCat = StaticCatalog.overLocalFiles(spark, "ex", flatFiles, Seq("tag"),
+      flatFiles.zipWithIndex.map { case (p, i) => p -> Seq(s"t$i") }.toMap)
+    for ((cat, filter) <- Seq(hiveCat -> None, explicitCat -> None,
+        hiveCat -> Some("month = 'none'"))) {
+      val pf = filter.fold("")(f => s""", "partition_filter": "$f"""")
+      val json =
+        s"""{"steps": [
+           |  {"sql": "SELECT * FROM ${cat.name}", "name": "m", "step_type": "HBee"$pf},
+           |  {"sql": "SELECT * FROM m", "name": "r", "step_type": "HComb"}],
+           | "capacity": {"zones": 1}, "catalogs": []}""".stripMargin
+      val one = new BuzzEngine(Map(cat.name -> cat))
+      val ran = one.runJson(spark, json).schema.toDDL
+      val explained = JsonMethods.parse(one.explainJson(spark, json))
+      for (step <- Seq("map", "reduce"))
+        assert((explained \ step \ "output_schema") == JString(ran),
+          s"${cat.name} $filter: $step output_schema differs from run's $ran")
+    }
   }
 
   test("format-aware Static catalogs: json with declared schema answers exactly; misuse rejected") {

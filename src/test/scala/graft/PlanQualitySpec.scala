@@ -262,9 +262,9 @@ class PlanQualitySpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.execution.FileSourceScanExec
     import graft.sources.StaticCatalog
-    // 120 partition directories: the per-tuple-union read path would plan a
-    // 120-branch union whose analysis alone dominates at real cardinality —
-    // the native partitioned read must keep a single scan node
+    // 120 partition directories: a per-tuple union would plan a 120-branch
+    // union whose analysis alone dominates at real cardinality — a catalog
+    // read must keep a single scan node
     val dir = java.nio.file.Files.createTempDirectory("graft_manyparts").toString
     spark.range(120)
       .select(
@@ -277,19 +277,39 @@ class PlanQualitySpec extends AnyFunSuite {
     assert(cat.files.length == 120, s"expected 120 files, got ${cat.files.length}")
     val pruned = cat.prune(spark, Some("bucket >= 'p100'"))
     assert(pruned.length == 20)
-    val df = cat.read(spark, pruned)
-    val plan = df.queryExecution.executedPlan
-    val scans = plan.collectLeaves().collect { case f: FileSourceScanExec => f }
-    assert(scans.length == 1,
-      s"expected ONE FileScan for 20 partition dirs, got ${scans.length}:\n${plan.toString.take(1200)}")
-    assert(!plan.toString.contains("Union"),
-      s"partitioned read must not union per-tuple scans:\n${plan.toString.take(1200)}")
-    // only the pruned directories' files feed the scan
-    assert(df.inputFiles.length == 20, s"scan reads ${df.inputFiles.length} files, want 20")
-    // partition values surface as strings with full fidelity
-    val got = df.select("bucket").distinct().collect().map(_.getString(0)).toSet
-    assert(got == (100 until 120).map(i => f"p$i%03d").toSet)
-    assert(df.count() == 20)
+    // every layout plans the same single scan and surfaces its values
+    // literally: a Hive layout, an explicit catalog whose values appear in
+    // no path, and a partition holding the null sentinel
+    def assertOneScan(df: org.apache.spark.sql.DataFrame, partCol: String, files: Int,
+        rows: Long, values: Set[String]): Unit = {
+      val plan = df.queryExecution.executedPlan
+      val scans = plan.collectLeaves().collect { case f: FileSourceScanExec => f }
+      assert(scans.length == 1,
+        s"expected ONE FileScan over $files files, got ${scans.length}:\n${plan.toString.take(1200)}")
+      assert(!plan.toString.contains("Union"),
+        s"a catalog read must not union per-tuple scans:\n${plan.toString.take(1200)}")
+      // only the selected files feed the scan
+      assert(df.inputFiles.length == files, s"scan reads ${df.inputFiles.length} files, want $files")
+      val got = df.select(partCol).distinct().collect().map(_.getString(0)).toSet
+      assert(got == values)
+      assert(df.count() == rows)
+    }
+    assertOneScan(cat.read(spark, pruned), "bucket", 20, 20, (100 until 120).map(i => f"p$i%03d").toSet)
+    val explicit = StaticCatalog.overLocalFiles(spark, "explicit", pruned.map(_.key), Seq("label"),
+      pruned.zipWithIndex.map { case (f, i) => f.key -> Seq(s"label ${i % 3}") }.toMap)
+    assertOneScan(explicit.read(spark, explicit.files), "label", 20, 20,
+      Set("label 0", "label 1", "label 2"))
+    val nullDir = java.nio.file.Files.createTempDirectory("graft_nullpart").toString
+    spark.range(30)
+      .select(col("id"),
+        when(col("id") % 3 =!= 0, format_string("q%d", col("id") % 3)).as("bucket"),
+        (col("id") * 7).as("v"))
+      .repartition(1)
+      .write.partitionBy("bucket").mode("overwrite").parquet(nullDir)
+    val nulls = StaticCatalog.overPath(spark, "nulls", nullDir)
+    assert(nulls.files.exists(_.partitionValues == Seq(graft.sources.DeltaCatalog.NullPartitionValue)))
+    assertOneScan(nulls.read(spark, nulls.files), "bucket", 3, 30,
+      Set(graft.sources.DeltaCatalog.NullPartitionValue, "q1", "q2"))
   }
 
   test("retention derives cohorts with a window over the distinct relation — no self-join") {
