@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Derive a larger benchmark dataset from a driver-generated SF dir by
@@ -20,14 +20,7 @@ object MakeScaled {
     val Array(srcDir, outDir, kStr) = args.take(3)
     val k = kStr.toInt
     require(k >= 1, s"k must be >= 1, got $k")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     val stride = 100000000L
 
     // Dimension tables ship as single parquet FILES named table.parquet

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local profiling harness: run ONE SparkEntry query by name `reps` times
   * against a testdata dir and print per-run wall seconds — for narrowing
   * down which stage of a slow query pays the cost (pair with the Spark UI
@@ -11,32 +9,21 @@ object Profile {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // per-run Spark job count: iterative operators pay a fixed-latency
     // barrier per action, so "how many jobs did this query run" is the
     // direct readout of the §2.6 fold-the-action work
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    })
+    val metrics = new graft.plans.QueryMetricsListener
+    spark.sparkContext.addSparkListener(metrics)
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { i =>
       graft.operators.PipelineCache.clear()
       spark.catalog.clearCache()
-      jobs.set(0)
+      metrics.jobs.reset()
       val t0 = System.nanoTime()
       val n = fn(spark, sfDir).count()
       val sec = (System.nanoTime() - t0) / 1e9
-      println(f"[profile] $name run $i: $sec%.2f s ($n rows, ${jobs.get()} jobs)")
+      println(f"[profile] $name run $i: $sec%.2f s ($n rows, ${metrics.jobs.sum()} jobs)")
     }
     spark.stop()
   }

@@ -177,15 +177,7 @@ object Server {
 
   def main(args: Array[String]): Unit = {
     val port = sys.env.getOrElse("GRAFT_PORT", "3333").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // serverless parity: exit after the reference's 300 s idle default
     // (hcomb_service.rs:24); <= 0 disables and the server runs until killed
     val idleSec = sys.env.getOrElse("SPARK_GRAFT_IDLE_SHUTDOWN_SEC", "300").toDouble

@@ -2635,7 +2635,7 @@ object SparkEntry {
     // again under the normal writer gate.
     "sink_delta_migrate_dv" -> ((s, dir) => {
       import graft.operators.Sinks
-      import graft.sources.{DeltaCatalog, FsUtil}
+      import graft.sources.{DeletionVectors, DeltaCatalog, FsUtil}
       val out = s"${System.getProperty("java.io.tmpdir")}/graft_deltamigdv_" +
         fixtureKey(dir, "documents")
       FsUtil.fs(s, out).delete(new org.apache.hadoop.fs.Path(out), true)
@@ -2647,14 +2647,16 @@ object SparkEntry {
         docs.filter(pmod(col("doc_id"), lit(2L)) === 1).repartition(4), out)
       // the legacy commit: (__path, __ri) row identities of doc_id%10=3
       // into a _dv/ parquet sidecar, each affected file removed + re-added
-      // with the legacy descriptor — exactly what the r8/r9 engine wrote
+      // with the legacy descriptor — exactly what the r8/r9 engine wrote,
+      // which named each file by its scheme-stripped scan path
       val raw = {
         val c = DeltaCatalog.fromDeltaLog(s, out, "mig_fixture_raw")
         c.readWithRowIndex(s, c.files)
       }
       val batchRel = "_dv/delete-mig-fixture"
+      val legacyPath = udf(DeletionVectors.legacySidecarPath _)
       raw.filter(pmod(col("doc_id"), lit(10L)) === 3)
-        .select(col("__gfp").as("__path"), col("__gri").as("__ri"))
+        .select(legacyPath(col("__gfp")).as("__path"), col("__gri").as("__ri"))
         .coalesce(1).write.parquet(s"$out/$batchRel")
       val perFile = s.read.parquet(s"$out/$batchRel")
         .groupBy("__path").agg(count(lit(1)).as("n"))
@@ -2662,11 +2664,13 @@ object SparkEntry {
       val cat = DeltaCatalog.fromDeltaLog(s, out, "mig_fixture")
       val rawByKey = DeltaCatalog.liveRawByKey(s, out)
       val now = java.lang.System.currentTimeMillis()
+      val conf = s.sessionState.newHadoopConf()
       val lines = cat.files
-        .filter(f => perFile.contains(FsUtil.normalizePath(f.key)))
-        .map { f =>
+        .map(f => f -> DeletionVectors.legacySidecarPath(f.scanPath(conf)))
+        .filter { case (_, stored) => perFile.contains(stored) }
+        .map { case (f, stored) =>
           val rawPath = rawByKey(f.key)
-          val card = perFile(FsUtil.normalizePath(f.key))
+          val card = perFile(stored)
           s"""{"remove":{"path":"$rawPath","deletionTimestamp":$now,"dataChange":true}}""" +
             "\n" +
             s"""{"add":{"path":"$rawPath","size":${f.length},"partitionValues":{},"dataChange":true,"deletionVector":{"storageType":"p","pathOrInlineDv":"$batchRel","cardinality":$card}}}"""

@@ -463,7 +463,7 @@ object Sinks {
       if (target == current && targetDvs == currentDvs) return head
       val fsys = FsUtil.fs(spark, tablePath)
       val missing = (target.keySet -- current.keySet).filterNot(raw =>
-        fsys.exists(new Path(tablePath, DeltaCatalog.decodePath(raw))))
+        fsys.exists(new Path(DeltaCatalog.fileKey(tablePath, raw))))
       if (missing.nonEmpty)
         throw new BuzzException.BadRequest(
           s"cannot restore $tablePath to version $version: ${missing.size} " +
@@ -795,25 +795,22 @@ object Sinks {
       removes: Seq[String],
       pre: Map[String, (Long, Map[String, String])],
       preDvs: Map[String, graft.sources.DvDescriptor]): org.apache.spark.sql.DataFrame = {
-    import org.apache.hadoop.fs.Path
     import graft.sources.{DeletionVectors, DeltaCatalog, SizedFile}
     import graft.model.BuzzException
-    def abs(raw: String): String =
-      new Path(tablePath, DeltaCatalog.decodePath(raw)).toString
     def sized(raw: String, size: Long, pv: Map[String, String]): SizedFile =
-      SizedFile(abs(raw), size,
+      SizedFile(DeltaCatalog.fileKey(tablePath, raw), size,
         cat.partitionColumns.map(c => pv.getOrElse(c, DeltaCatalog.NullPartitionValue)))
     // each side reads under ITS OWN deletion-vector truth: adds under the
     // commit's descriptors, removes under the pre-commit state — a DV
     // delete (remove+re-add of the same path) then feeds exactly the
     // newly-deleted rows, instead of a spuriously empty diff
     val addDvs = adds.collect { case (raw, _, _, Some(dv), _) =>
-      abs(raw) -> DeletionVectors.resolve(tablePath, dv)
+      DeltaCatalog.fileKey(tablePath, raw) -> DeletionVectors.resolve(tablePath, dv)
     }.toMap
     val addedRows = cat.withDeletionVectors(addDvs).read(
       spark, adds.map { case (raw, size, pv, _, _) => sized(raw, size, pv) })
     val remDvs = removes.flatMap(raw => preDvs.get(raw).map(dv =>
-      abs(raw) -> DeletionVectors.resolve(tablePath, dv))).toMap
+      DeltaCatalog.fileKey(tablePath, raw) -> DeletionVectors.resolve(tablePath, dv))).toMap
     val remCat = cat.withDeletionVectors(remDvs)
     val removedRows = remCat.read(spark, removes.map { raw =>
       pre.get(raw) match {
@@ -897,10 +894,7 @@ object Sinks {
         }
       }
     }
-    import org.apache.hadoop.fs.Path
-    import graft.sources.{DeletionVectors, DvDescriptor, SizedFile}
-    def abs(raw: String): String =
-      new Path(tablePath, DeltaCatalog.decodePath(raw)).toString
+    import graft.sources.{DeletionVectors, SizedFile}
     val frames = scala.collection.mutable.ListBuffer[org.apache.spark.sql.DataFrame]()
     // single-sided runs keyed by (schema era, status, identity-mismatch
     // generation), NON-contiguous like the row-level feed's
@@ -920,16 +914,13 @@ object Sinks {
     def runFrame(run: DiffRun): org.apache.spark.sql.DataFrame = {
       val runFiles = run.files.toSeq
       val dvs = runFiles.collect { case (raw, _, _, Some(dv), _) =>
-        abs(raw) -> DeletionVectors.resolve(tablePath, dv)
+        DeltaCatalog.fileKey(tablePath, raw) -> DeletionVectors.resolve(tablePath, dv)
       }.toMap
-      val sized = runFiles.map { case (raw, size, pv, _, _) =>
-        SizedFile(abs(raw), size, run.cat.partitionColumns.map(c =>
-          pv.getOrElse(c, DeltaCatalog.NullPartitionValue)))
-      }
-      val df = run.cat.withDeletionVectors(dvs).readKeepingPath(spark, sized)
-      val withVer = attachCommitVersionsMulti(spark, df,
-        runFiles.map { case (raw, _, _, _, vs) =>
-          graft.sources.FsUtil.normalizePath(abs(raw)) -> vs
+      val withVer = readWithCommitVersions(spark, run.cat.withDeletionVectors(dvs),
+        runFiles.map { case (raw, size, pv, _, vs) =>
+          SizedFile(DeltaCatalog.fileKey(tablePath, raw), size,
+            run.cat.partitionColumns.map(c =>
+              pv.getOrElse(c, DeltaCatalog.NullPartitionValue))) -> vs
         })
       // era-local logical key names -> the consumer's current names
       val renamed = run.eraKeys.zip(keyCols)
@@ -1053,15 +1044,15 @@ object Sinks {
   /** Join each row's `_commit_version` from its source file — the seam
     * that lets a MULTI-COMMIT run read as ONE relation and still label
     * every row with the commit that produced it. `df` carries `__gfp`
-    * (the scan's scheme-normalized file path); `pathToVersion` maps the
-    * same normalized form, one row per file — file-count-sized, built on
+    * (the scan's `_metadata.file_path`); `pathToVersions` maps each
+    * file's [[graft.sources.SizedFile.scanPath]], the same string by
+    * construction, one row per file — file-count-sized, built on
     * the driver from the commit actions already in hand, and BROADCAST
     * (an executor-side hash lookup per row, never a shuffle). The join is
     * LEFT with an executor-side raise_error guard: every scanned row
-    * comes from a listed file, so a miss is an engine bug (the scan's
-    * `_metadata.file_path` normalization disagreeing with
-    * [[graft.sources.FsUtil.normalizePath]] — e.g. a percent-encoded or
-    * exotic file name) and must surface as an ERROR NAMING THE PATH, not
+    * comes from a listed file, so a miss is an engine bug (a version map
+    * keyed by anything but the scan path) and must surface as an ERROR
+    * NAMING THE PATH, not
     * as silently vanished change rows (what an inner join's miss looks
     * like). AssertNotNull re-declares the guarded column non-nullable —
     * the guard fires before it ever could — so the feed schema keeps the
@@ -1160,21 +1151,29 @@ object Sinks {
       spark: org.apache.spark.sql.SparkSession, tablePath: String,
       cat: graft.sources.StaticCatalog,
       cdcs: Seq[(String, Long, Map[String, String], Seq[Long])]): DataFrame = {
-    import org.apache.hadoop.fs.Path
     import org.apache.spark.sql.types._
-    import graft.sources.{DeltaCatalog, FsUtil, SizedFile}
-    def abs(raw: String): String =
-      new Path(tablePath, DeltaCatalog.decodePath(raw)).toString
+    import graft.sources.{DeltaCatalog, SizedFile}
     val cdcSchema = StructType(cat.schema.fields.toSeq :+
       StructField("_change_type", StringType, nullable = false))
     val cdcCat = new graft.sources.StaticCatalog(
       s"${cat.name}_cdc", cdcSchema, cat.partitionColumns, Nil)
-    val sized = cdcs.map { case (raw, size, pv, _) =>
-      SizedFile(abs(raw), size, cat.partitionColumns.map(c =>
-        pv.getOrElse(c, DeltaCatalog.NullPartitionValue)))
-    }
-    attachCommitVersionsMulti(spark, cdcCat.readKeepingPath(spark, sized),
-      cdcs.map { case (raw, _, _, vs) => FsUtil.normalizePath(abs(raw)) -> vs })
+    readWithCommitVersions(spark, cdcCat, cdcs.map { case (raw, size, pv, vs) =>
+      SizedFile(DeltaCatalog.fileKey(tablePath, raw), size,
+        cat.partitionColumns.map(c =>
+          pv.getOrElse(c, DeltaCatalog.NullPartitionValue))) -> vs
+    })
+  }
+
+  /** Read `files` through `cat` as ONE relation, each row labeled with
+    * its file's commit versions ([[attachCommitVersionsMulti]]); the
+    * version map is keyed by [[graft.sources.SizedFile.scanPath]], the
+    * same string the scan reports as the row's `__gfp`. */
+  private def readWithCommitVersions(
+      spark: org.apache.spark.sql.SparkSession, cat: graft.sources.SplittableCatalog,
+      files: Seq[(graft.sources.SizedFile, Seq[Long])]): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    attachCommitVersionsMulti(spark, cat.readKeepingPath(spark, files.map(_._1)),
+      files.map { case (f, vs) => f.scanPath(conf) -> vs })
   }
 
   /** The protocol's ROW-LEVEL change feed over the commit span
@@ -1422,24 +1421,18 @@ object Sinks {
   private[graft] def readFeedRun(
       spark: org.apache.spark.sql.SparkSession, tablePath: String,
       run: FeedRun): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    import graft.sources.{DeletionVectors, DeltaCatalog, FsUtil, SizedFile}
-    def abs(raw: String): String =
-      new Path(tablePath, DeltaCatalog.decodePath(raw)).toString
+    import graft.sources.{DeletionVectors, DeltaCatalog, SizedFile}
     if (run.kind == "cdc") readChangeData(spark, tablePath, run.cat, run.files
       .map { case (raw, size, pv, _, vs) => (raw, size, pv, vs) })
     else {
       val dvs = run.files.collect { case (raw, _, _, Some(dv), _) =>
-        abs(raw) -> DeletionVectors.resolve(tablePath, dv)
+        DeltaCatalog.fileKey(tablePath, raw) -> DeletionVectors.resolve(tablePath, dv)
       }.toMap
-      val sized = run.files.map { case (raw, size, pv, _, _) =>
-        SizedFile(abs(raw), size, run.cat.partitionColumns.map(c =>
-          pv.getOrElse(c, DeltaCatalog.NullPartitionValue)))
-      }
-      val df = run.cat.withDeletionVectors(dvs).readKeepingPath(spark, sized)
-      attachCommitVersionsMulti(spark, df,
-        run.files.map { case (raw, _, _, _, vs) =>
-          FsUtil.normalizePath(abs(raw)) -> vs
+      readWithCommitVersions(spark, run.cat.withDeletionVectors(dvs),
+        run.files.map { case (raw, size, pv, _, vs) =>
+          SizedFile(DeltaCatalog.fileKey(tablePath, raw), size,
+            run.cat.partitionColumns.map(c =>
+              pv.getOrElse(c, DeltaCatalog.NullPartitionValue))) -> vs
         }).withColumn("_change_type",
           lit(if (run.kind == "insert") "insert" else "delete"))
     }
@@ -1817,7 +1810,7 @@ object Sinks {
         val ts = scala.collection.mutable.HashMap[String, Long]()
         DeltaCatalog.tombstonesByRaw(spark, tablePath).foreach {
           case (raw, (t, dv)) =>
-            ts(new Path(tablePath, DeltaCatalog.decodePath(raw)).toString) = t
+            ts(DeltaCatalog.fileKey(tablePath, raw)) = t
             dv.foreach { d =>
               val r = graft.sources.DeletionVectors.resolve(tablePath, d)
               if (r.storageType != "i")
@@ -1899,7 +1892,7 @@ object Sinks {
             case CommitName(v) =>
               parseCommitActions(spark, tablePath, v.toLong).cdcs.map {
                 case (raw, _, _) =>
-                  qual(new Path(tablePath, DeltaCatalog.decodePath(raw)).toString)
+                  qual(DeltaCatalog.fileKey(tablePath, raw))
               }
             case _ => Nil
           }).toSet
@@ -2087,8 +2080,7 @@ object Sinks {
     val partitionCols = cat.partitionColumns
     val candFiles = candRaws.map { raw =>
       val (size, pv) = liveRaw(raw)
-      SizedFile(
-        new Path(tablePath, DeltaCatalog.decodePath(raw)).toString, size,
+      SizedFile(DeltaCatalog.fileKey(tablePath, raw), size,
         partitionCols.map(c => pv.getOrElse(c, DeltaCatalog.NullPartitionValue)))
     }
     KeyPruning(candRaws, candFiles, columns)
@@ -3286,8 +3278,7 @@ object Sinks {
         throw new BuzzException.BadRequest(
           s"$who: source commit $v adds a deletion-vectored " +
             "file — an append-only consumer cannot express row removal")
-      SizedFile(
-        new Path(srcPath, DeltaCatalog.decodePath(raw)).toString, size,
+      SizedFile(DeltaCatalog.fileKey(srcPath, raw), size,
         cat.partitionColumns.map(c =>
           pv.getOrElse(c, DeltaCatalog.NullPartitionValue)))
     }
@@ -3542,11 +3533,9 @@ object Sinks {
       .map(_.json)
       .getOrElse(throw new BuzzException.BadRequest(
         s"no metaData action in $srcPath"))
-    def absUri(rel: String): String =
-      new Path(srcPath, DeltaCatalog.decodePath(rel)).toUri.toString
     val adds: Seq[JValue] = live.toSeq.sortBy(_._1).map { case (raw, (size, pv)) =>
       val base: List[(String, JValue)] = List(
-        "path" -> JString(absUri(raw)),
+        "path" -> JString(new Path(DeltaCatalog.fileKey(srcPath, raw)).toUri.toString),
         "size" -> JLong(size),
         "partitionValues" -> JObject(pv.map { case (k, v) =>
           k -> (JString(v): JValue) }.toList),
@@ -3708,7 +3697,7 @@ object Sinks {
       val headCat = DeltaCatalog.fromDeltaLog(spark, tablePath, "__append_probe")
       val byKey = headCat.files.map(f => f.key -> f).toMap
       val appendedFiles = appended.keys.toSeq.sorted.flatMap { raw =>
-        byKey.get(new Path(tablePath, DeltaCatalog.decodePath(raw)).toString)
+        byKey.get(DeltaCatalog.fileKey(tablePath, raw))
       }
       ZoneMap.pruneForQuery(
         spark, headCat.schema, appendedFiles,
@@ -3748,7 +3737,7 @@ object Sinks {
       spark: org.apache.spark.sql.SparkSession, tablePath: String,
       predicateSql: String): Long = {
     import org.apache.hadoop.fs.Path
-    import graft.sources.{DeltaCatalog, FsUtil, ZoneMap}
+    import graft.sources.{DeltaCatalog, ZoneMap}
     import graft.model.BuzzException
     val logDir = s"$tablePath/_delta_log"
     // pin the snapshot FIRST (commitRewrite discipline)
@@ -3777,14 +3766,16 @@ object Sinks {
       .select(col("__gfp").as("__path"), col("__gri").as("__ri"))
     // carry over each candidate's EXISTING deleted rows — its descriptor
     // will re-point to the new vector (a descriptor names exactly one)
+    val conf = spark.sessionState.newHadoopConf()
+    val scanPathOf = candFiles.map(f => f.key -> f.scanPath(conf)).toMap
     val existingPairs = candFiles.flatMap(f =>
-      cat.deletionVectors.get(f.key).map(dv => (FsUtil.normalizePath(f.key), dv)))
+      cat.deletionVectors.get(f.key).map(dv => (scanPathOf(f.key), dv)))
     val existingRows = graft.sources.DeletionVectors.deletedRowsDF(spark, existingPairs)
     val allDeleted = matches.unionAll(existingRows).distinct()
-    val dvByNorm = writeVectorFiles(spark, tablePath, allDeleted)
-    if (dvByNorm.isEmpty) // nothing matched anywhere: no commit
+    val dvByPath = writeVectorFiles(spark, tablePath, allDeleted)
+    if (dvByPath.isEmpty) // nothing matched anywhere: no commit
       return DeltaCatalog.latestVersion(spark, logDir)
-    val affected = candFiles.filter(f => dvByNorm.contains(FsUtil.normalizePath(f.key)))
+    val affected = candFiles.filter(f => dvByPath.contains(scanPathOf(f.key)))
     val removedRaws = affected.map(f => rawByKey.getOrElse(f.key,
       throw new BuzzException.ExecutionError(
         s"dv-delete: no raw log path for live file ${f.key} — snapshot drifted")))
@@ -3798,7 +3789,7 @@ object Sinks {
     }
     val dvByRel = affected.map { f =>
       val rel = DeltaCatalog.decodePath(rawByKey(f.key))
-      rel -> dvByNorm(FsUtil.normalizePath(f.key))
+      rel -> dvByPath(scanPathOf(f.key))
     }.toMap
     // change-data capture: the NEWLY-deleted visible rows (the DV-applied
     // read excludes rows earlier vectors already deleted). Zero visible
@@ -3831,10 +3822,10 @@ object Sinks {
   }
 
   /** Write the protocol's `.bin` vector files DISTRIBUTED from `rows`
-    * ((`__path` normalized file key, `__ri` row index)): each task
+    * ((`__path` scan path, `__ri` row index)): each task
     * serializes its files' portable RoaringBitmaps into one vector file
     * under the table root and reports the framed descriptors keyed by
-    * normalized path — deleted rows never pass through the driver, and
+    * scan path — deleted rows never pass through the driver, and
     * the bytes on disk are the interoperable format any conformant Delta
     * reader decodes. Shared by [[deltaDeleteVectors]] and
     * [[deltaMigrateDvs]]. */
@@ -3884,7 +3875,7 @@ object Sinks {
   def deltaMigrateDvs(
       spark: org.apache.spark.sql.SparkSession, tablePath: String): Long = {
     import org.apache.spark.sql.types.StructType
-    import graft.sources.{DeltaCatalog, FsUtil}
+    import graft.sources.DeltaCatalog
     import graft.model.BuzzException
     val logDir = s"$tablePath/_delta_log"
     // pin the snapshot FIRST (commitRewrite discipline)
@@ -3896,15 +3887,15 @@ object Sinks {
     if (affected.isEmpty) return DeltaCatalog.latestVersion(spark, logDir)
     val rawByKey = DeltaCatalog.liveRawByKey(spark, tablePath,
       if (snapVer >= 0) Some(snapVer) else None)
-    val entries = affected.map(f =>
-      (FsUtil.normalizePath(f.key), cat.deletionVectors(f.key)))
+    val conf = spark.sessionState.newHadoopConf()
+    val scanPathOf = affected.map(f => f.key -> f.scanPath(conf)).toMap
+    val entries = affected.map(f => (scanPathOf(f.key), cat.deletionVectors(f.key)))
     val rows = graft.sources.DeletionVectors.deletedRowsDF(spark, entries)
-    val dvByNorm = writeVectorFiles(spark, tablePath, rows)
+    val dvByPath = writeVectorFiles(spark, tablePath, rows)
     // every affected file MUST come out with a descriptor — a sidecar
     // that yielded no rows for a file it claims to delete from would
     // otherwise drop the descriptor and RESURRECT those rows
-    val uncovered = affected.map(f => FsUtil.normalizePath(f.key))
-      .filterNot(dvByNorm.contains)
+    val uncovered = affected.map(f => scanPathOf(f.key)).filterNot(dvByPath.contains)
     if (uncovered.nonEmpty)
       throw new BuzzException.ExecutionError(
         s"migrate-dvs: ${uncovered.size} legacy sidecar(s) decoded to zero " +
@@ -3918,7 +3909,7 @@ object Sinks {
         cat.partitionColumns.zip(f.partitionValues), f.modificationTime)
     }
     val dvByRel = affected.map { f =>
-      DeltaCatalog.decodePath(rawByKey(f.key)) -> dvByNorm(FsUtil.normalizePath(f.key))
+      DeltaCatalog.decodePath(rawByKey(f.key)) -> dvByPath(scanPathOf(f.key))
     }.toMap
     commitRewrite(spark, tablePath, adds, removedRaws,
       StructType(cat.schema.fields), "migrate-dvs",

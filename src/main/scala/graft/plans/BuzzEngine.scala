@@ -6,7 +6,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 import graft.model.{BuzzException, BuzzQuery}
-import graft.sources.{CatalogResolver, SchemaVerifier, SplittableCatalog}
+import graft.sources.{CatalogResolver, SchemaVerifier, SizedFile, SplittableCatalog}
 
 /** Executes a validated two-step buzz query.
   *
@@ -140,7 +140,7 @@ final class BuzzEngine(
       val df = buildDf(spark, p)
       val rows =
         try df.collect()
-        catch { case e: Throwable => throw attributeWorkerFailure(e, p.files.map(_.key)) }
+        catch { case e: Throwable => throw attributeWorkerFailure(spark, e, p.files) }
       // the listener bus is async: wait until task-end and stage-completed
       // events stop arriving
       var last = -1L
@@ -162,22 +162,21 @@ final class BuzzEngine(
     * with the reference's collector, which logs which hbee failed and why
     * (`collector.rs:39-62`: the FAIL action carries the hbee's reason up to
     * the fuse). Spark buries the file in a cause-chain message; this walks
-    * the chain, matches it against the query's own planned file list, and
-    * rethrows a [[BuzzException.ExecutionError]] that NAMES the file (plus
-    * the root cause), with the original exception attached. Unattributable
-    * failures (reduce-side OOM, network) still map to ExecutionError with
-    * the root message. */
-  private def attributeWorkerFailure(e: Throwable, fileKeys: Seq[String]): Throwable = {
+    * the chain, matches it against the scan path of each of the query's
+    * planned files ([[SizedFile.scanPath]], the path Spark's reader names
+    * in its errors), and rethrows a [[BuzzException.ExecutionError]] that
+    * NAMES the file (plus the root cause), with the original exception
+    * attached. Unattributable failures (reduce-side OOM, network) still
+    * map to ExecutionError with the root message. */
+  private def attributeWorkerFailure(
+      spark: SparkSession, e: Throwable, files: Seq[SizedFile]): Throwable = {
     val chain = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16).toSeq
     val messages = chain.flatMap(t => Option(t.getMessage))
-    def tokens(key: String): Seq[String] = {
-      val noScheme = key.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/*", "/")
-      Seq(key, noScheme).distinct
-    }
-    val failing = fileKeys.find(k => tokens(k).exists(t => messages.exists(_.contains(t))))
+    val conf = spark.sessionState.newHadoopConf()
+    val failing = files.find(f => messages.exists(_.contains(f.scanPath(conf))))
     val root = chain.last
     val err = new BuzzException.ExecutionError(
-      failing.fold("worker failed")(f => s"worker failed on file $f") +
+      failing.fold("worker failed")(f => s"worker failed on file ${f.key}") +
         s": ${root.getClass.getSimpleName}: ${String.valueOf(root.getMessage).take(300)}")
     err.initCause(e)
     err

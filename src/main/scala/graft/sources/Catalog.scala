@@ -30,11 +30,25 @@ final case class SizedFile(
   def id: MetaCache.FileId = MetaCache.FileId(key, length, modificationTime)
 
   /** This file as Spark's reader would stat it: the path qualified against
-    * its file system, with the catalog's length and modification time. */
+    * its file system, with the catalog's length and modification time.
+    * The qualified path is parsed once more from its string form, as
+    * Spark's `FileFormat` does before reporting `_metadata.file_path`, so
+    * an empty authority (`file:///x`) becomes none (`file:/x`) and every
+    * string Spark derives from this status is [[scanPath]]. */
   private[sources] def status(conf: Configuration): FileStatus = {
     val p = new Path(key)
-    new FileStatus(length, false, 0, 0L, modificationTime, p.getFileSystem(conf).makeQualified(p))
+    val qualified = new Path(p.getFileSystem(conf).makeQualified(p).toString)
+    new FileStatus(length, false, 0, 0L, modificationTime, qualified)
   }
+
+  /** The file's identity inside a scan: the URI of the path
+    * [[SelectedFileIndex]] hands Spark, which Spark reports as
+    * `_metadata.file_path` for each row read from it and names in its
+    * read errors. Every match between catalog files and scanned rows
+    * (deletion vectors, per-file commit versions, worker-failure
+    * attribution) compares this string. */
+  private[graft] def scanPath(conf: Configuration): String =
+    status(conf).getPath.toUri.toString
 }
 
 /** A catalog that can list its files as a queryable table and be split into
@@ -153,7 +167,7 @@ trait SplittableCatalog {
     readInternal(spark, selected, withRowIndex = false, keepPath = false)
 
   /** [[read]] WITHOUT deletion-vector filtering, plus two trailing columns:
-    * `__gfp` (scheme-normalized file path) and `__gri` (the parquet scan's
+    * `__gfp` (the row's [[SizedFile.scanPath]]) and `__gri` (the parquet scan's
     * `_metadata.row_index`). The DV writer's raw view — it must see every
     * physical row to compute and merge deleted row indexes. */
   private[graft] final def readWithRowIndex(
@@ -161,7 +175,7 @@ trait SplittableCatalog {
     readInternal(spark, selected, withRowIndex = true, keepPath = false)
 
   /** [[read]] (deletion vectors applied) plus one trailing `__gfp` column
-    * — the scheme-normalized source-file path of each row. The change-feed
+    * — the [[SizedFile.scanPath]] of each row's source file. The change-feed
     * readers join per-file metadata (the commit version that added or
     * removed a file) back onto the rows of a MULTI-COMMIT single-relation
     * scan, which is what keeps a long feed span's plan width bounded by
@@ -200,17 +214,18 @@ trait SplittableCatalog {
     // partition columns are strings holding the catalog's values verbatim
     // (the reference's strings-only model, README.md:113)
     val partitionSchema = StructType(partitionColumns.map(StructField(_, StringType)))
+    val conf = spark.sessionState.newHadoopConf()
     val loaded = spark.baseRelationToDataFrame(HadoopFsRelation(
-      SelectedFileIndex(partitionSchema, selected)(spark.sessionState.newHadoopConf()),
+      SelectedFileIndex(partitionSchema, selected)(conf),
       partitionSchema, PlanBridge.asNullable(readSchema), bucketSpec = None,
       StaticCatalog.SupportedFormats(format)(), formatOptions)(spark))
-    // row identity (normalized path + row index) is attached RIGHT AFTER
-    // the load — `_metadata` is a scan-relation column and must be
-    // resolved before projections hide it. Needed when this read either
-    // filters deletion vectors out or surfaces the identity itself.
+    // row identity (scan path + row index) is attached RIGHT AFTER the
+    // load — `_metadata` is a scan-relation column and must be resolved
+    // before projections hide it. Needed when this read either filters
+    // deletion vectors out or surfaces the identity itself.
     val scanned =
       if (!withRowIndex && !keepPath && !selected.exists(f => deletionVectors.contains(f.key))) loaded
-      else loaded.withColumn("__gfp", FsUtil.normalizePathCol(col("_metadata.file_path")))
+      else loaded.withColumn("__gfp", col("_metadata.file_path"))
         .withColumn("__gri", col("_metadata.row_index"))
     // surface mapped columns under their LOGICAL names from here on —
     // ONE atomic select (sequential renames would collide when a rename
@@ -226,7 +241,7 @@ trait SplittableCatalog {
       if (withRowIndex) logicalNamed
       else {
         val dvd = selected.flatMap(f => deletionVectors.get(f.key)
-          .map(dv => (FsUtil.normalizePath(f.key), dv)))
+          .map(dv => (f.scanPath(conf), dv)))
         if (dvd.isEmpty) logicalNamed
         else {
           // each file's descriptor frames exactly ONE vector; decode is

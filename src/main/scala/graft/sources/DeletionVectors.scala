@@ -147,7 +147,7 @@ object DeletionVectors {
 
   /** Is `d` the pre-r10 ENGINE dialect — storageType "p" pointing at a
     * parquet sidecar DIRECTORY (`_dv/delete-<uuid>`, rows of
-    * (`__path` normalized file key, `__ri` row index)) instead of the
+    * (`__path` [[legacySidecarPath]], `__ri` row index)) instead of the
     * protocol's framed `.bin` vector file? Kept readable (read-only) so
     * legacy tables and time travel to pre-migration versions still work;
     * [[graft.operators.Sinks.deltaMigrateDvs]] rewrites them into
@@ -367,8 +367,16 @@ object DeletionVectors {
   private def JsonMethodsCompact(j: JValue): String =
     org.json4s.jackson.JsonMethods.compact(org.json4s.jackson.JsonMethods.render(j))
 
+  /** How a pre-r10 parquet sidecar names a file: its scan path with the
+    * scheme and the slashes after it collapsed to one `/` (`file:/x/y` →
+    * `/x/y`). Only the legacy decode below reads this form, and only
+    * `SparkEntry`'s legacy-sidecar fixture writes it. */
+  private[graft] def legacySidecarPath(scanPath: String): String =
+    scanPath.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
+
   /** The deleted-row identity table of a set of resolved vectors, as a
-    * DataFrame of (`__path` file key, `__ri` row index) — the build side
+    * DataFrame of (`__path` [[SizedFile.scanPath]], `__ri` row index),
+    * from entries keyed by scan path — the build side
     * of the scan's anti-join and the merge input of a superseding DV
     * write. Decoding is DISTRIBUTED (one task per descriptor batch): at
     * 100 TB the union of a snapshot's vectors is deleted-rows-sized and
@@ -384,17 +392,21 @@ object DeletionVectors {
     if (entries.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     // pre-r10 parquet-sidecar entries decode through Spark's own parquet
-    // reader (the sidecar IS (`__path`, `__ri`) rows keyed by the same
-    // normalized file key the entries carry) — the read-only legacy path
-    // that keeps old tables and pre-migration time travel working
+    // reader (the sidecar IS (`__path`, `__ri`) rows, each file named by
+    // its [[legacySidecarPath]]); the join maps the stored name back to
+    // the entry's scan path — the read-only legacy path that keeps old
+    // tables and pre-migration time travel working
     val (legacy, protocol) = entries.partition(_._2.storageType == "legacy")
     val legacyDf: Option[org.apache.spark.sql.DataFrame] =
       if (legacy.isEmpty) None
       else {
-        import org.apache.spark.sql.functions.col
-        val keys = legacy.map(_._1).distinct
+        import org.apache.spark.sql.functions.{broadcast, col}
+        val stored = spark.createDataFrame(
+          legacy.map { case (path, _) => (legacySidecarPath(path), path) }.distinct)
+          .toDF("__stored", "__path")
         Some(spark.read.parquet(legacy.map(_._2.pathOrInline).distinct: _*)
-          .where(col("__path").isInCollection(keys))
+          .select(col("__path").as("__stored"), col("__ri"))
+          .join(broadcast(stored), "__stored")
           .select(col("__path"), col("__ri")))
       }
     val protocolDf: Option[org.apache.spark.sql.DataFrame] =

@@ -191,8 +191,7 @@ object DeltaCatalog {
     val state = replay(spark, tablePath, versionAsOf)
     LogSnapshot(
       toCatalog(spark, tablePath, name, state),
-      state.live.keys.map(raw =>
-        new Path(tablePath, decodePath(raw)).toString -> raw).toMap,
+      state.live.keys.map(raw => fileKey(tablePath, raw) -> raw).toMap,
       state.stats.toMap,
       state.dvs.toMap,
       state.tombstones.toMap,
@@ -245,8 +244,7 @@ object DeltaCatalog {
       spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long] = None): Map[String, String] = {
     val state = replay(spark, tablePath, versionAsOf)
-    state.live.keys.map(raw =>
-      new Path(tablePath, decodePath(raw)).toString -> raw).toMap
+    state.live.keys.map(raw => fileKey(tablePath, raw) -> raw).toMap
   }
 
   /** Raw-path live map (`add.path` log string -> (size, partitionValues))
@@ -922,9 +920,7 @@ object DeltaCatalog {
     // delta_catalog.rs:86-99).
     val dataSchema = StructType(schema.fields.filterNot(f => state.partitionCols.contains(f.name)))
     val files = state.live.toSeq.map { case (path, (size, pv)) =>
-      SizedFile(
-        new Path(tablePath, decodePath(path)).toString,
-        size,
+      SizedFile(fileKey(tablePath, path), size,
         state.partitionCols.map(c => pv.getOrElse(c, "")),
         state.mtimes.getOrElse(path, 0L))
     }
@@ -932,8 +928,7 @@ object DeltaCatalog {
     // deletion vectors, keyed by the same absolute key `files` carries,
     // resolved against the table root ("u" descriptors derive their file)
     val dvByKey = state.dvs.toMap.map { case (raw, d) =>
-      new Path(tablePath, decodePath(raw)).toString ->
-        DeletionVectors.resolve(tablePath, d)
+      fileKey(tablePath, raw) -> DeletionVectors.resolve(tablePath, d)
     }
     // missingNullableOk: schema evolution means pre-evolution files lack
     // later-added nullable columns — the strict verifier must tolerate that
@@ -1002,6 +997,14 @@ object DeltaCatalog {
       }
     }
     catch { case _: java.net.URISyntaxException => p }
+
+  /** The catalog key of a log `add.path`/`remove.path`/`cdc.path`: the
+    * raw string decoded ([[decodePath]]) and resolved against the table
+    * root. Every reader and writer derives a live file's key here, so the
+    * keys of [[toCatalog]]'s files, its deletion vectors, [[liveRawByKey]]
+    * and the change feed's per-file maps agree by construction. */
+  private[graft] def fileKey(tablePath: String, raw: String): String =
+    new Path(tablePath, decodePath(raw)).toString
 
   /** Inverse of [[decodePath]] for WRITERS: percent-encode an on-disk
     * relative path into the URI form `add.path` requires. Spark's Hive

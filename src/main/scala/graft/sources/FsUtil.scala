@@ -132,19 +132,6 @@ object FsUtil {
     }
   }
 
-  /** Scheme-normalized form of a file path, used to match a catalog key
-    * against the scan's `_metadata.file_path`: the two render the same
-    * file with different slash counts (`file:/x` vs `file:///x`), so both
-    * sides collapse scheme + slashes to a single leading `/` before
-    * comparison. Must stay in lockstep with [[normalizePathCol]]. */
-  def normalizePath(p: String): String =
-    p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-
-  /** Column form of [[normalizePath]] — same regex, evaluated in the scan. */
-  def normalizePathCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    org.apache.spark.sql.functions.regexp_replace(
-      c, "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
-
   /** Spark FileIndex's hidden-path convention: `.`-prefixed names and
     * `_`-prefixed names are metadata (`_delta_log`, `_zonemap`,
     * `.staging`…) — EXCEPT an `_`-prefixed name containing '=', which is

@@ -158,20 +158,39 @@ class CatalogSpec extends AnyFunSuite {
   }
 
   test("a selected file deleted after resolve fails the read at collect, not with a short answer") {
-    val local = tmpDir("graft_missing")
-    (0L until 4L).map(i => (i, i * 10)).toDF("id", "v")
-      .write.option("maxRecordsPerFile", 1L).parquet(s"$local/t")
-    val cat = StaticCatalog.overPath(spark, "gone", s"$local/t")
-    assert(cat.files.size == 4)
-    val victim = cat.files.head.key
-    assert(FsUtil.fs(spark, victim).delete(new org.apache.hadoop.fs.Path(victim), false))
-    // nothing is listed or stat'd while building: the missing file surfaces
-    // when its task opens it
-    val df = cat.read(spark, cat.files)
-    val e = intercept[org.apache.spark.SparkException](df.collect())
-    val causes = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).toSeq
-    assert(causes.exists(_.isInstanceOf[java.io.FileNotFoundException]),
-      s"expected a missing-file failure, got: ${e.getMessage.take(500)}")
+    // a flat directory, and a Hive partition whose value (`a b`) the
+    // scan path percent-encodes: the engine must still name the file
+    val layouts: Seq[org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =>
+        org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]] =
+      Seq(identity, _.partitionBy("g"))
+    layouts.foreach { layout =>
+      val local = tmpDir("graft_missing")
+      layout((0L until 4L).map(i => (i, i * 10, "a b")).toDF("id", "v", "g")
+        .write.option("maxRecordsPerFile", 1L)).parquet(s"$local/t")
+      val cat = StaticCatalog.overPath(spark, "gone", s"$local/t")
+      assert(cat.files.size == 4)
+      val victim = cat.files.head.key
+      assert(FsUtil.fs(spark, victim).delete(new org.apache.hadoop.fs.Path(victim), false))
+      // nothing is listed or stat'd while building: the missing file surfaces
+      // when its task opens it
+      val df = cat.read(spark, cat.files)
+      val e = intercept[org.apache.spark.SparkException](df.collect())
+      val causes = Iterator.iterate(e: Throwable)(_.getCause).takeWhile(_ != null).toSeq
+      assert(causes.exists(_.isInstanceOf[java.io.FileNotFoundException]),
+        s"expected a missing-file failure, got: ${e.getMessage.take(500)}")
+      val engine = new graft.plans.BuzzEngine(Map("gone" -> cat))
+      val failed = intercept[BuzzException.ExecutionError] {
+        engine.runAndCollect(spark, graft.model.BuzzQuery(
+          Seq(
+            graft.model.BuzzStep("SELECT count(*) AS cnt FROM gone", "m",
+              graft.model.BuzzStepType.HBee, None),
+            graft.model.BuzzStep("SELECT sum(cnt) AS total FROM m", "r",
+              graft.model.BuzzStepType.HComb, None)),
+          graft.model.BuzzCapacity(1), Nil))
+      }
+      assert(failed.getMessage.contains(s"worker failed on file $victim"),
+        s"error must name the deleted file $victim: ${failed.getMessage}")
+    }
   }
 
   test("schema verification rejects a file missing a declared column") {

@@ -69,46 +69,58 @@ class DeltaChangeFeedSpec extends AnyFunSuite {
   }
 
   test("commits without cdc DERIVE: appends feed inserts, partition deletes feed deletes") {
-    val dir = tmpDir("cdf_derive")
-    Sinks.deltaAppend(
-      Seq((1L, 10L, "a"), (2L, 20L, "b")).toDF("id", "v", "p"), dir, Seq("p")) // v0
-    Sinks.deltaAppend(Seq((3L, 30L, "a")).toDF("id", "v", "p"), dir, Seq("p")) // v1
-    Sinks.deltaDeletePartition(spark, dir, "p", "a")                           // v2
-    val rows = Sinks.deltaChangeFeed(spark, dir, 0L, 2L)
-      .select(col("_commit_version"), col("_change_type"), col("id"), col("p"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
-      .sortBy(t => (t._1, t._3)).toSeq
-    assert(rows === Seq(
-      (1L, "insert", 3L, "a"),
-      (2L, "delete", 1L, "a"),
-      (2L, "delete", 3L, "a")))
+    // the second pair's values percent-encode in the scan path: the feed
+    // must still find each scanned file's commit version
+    Seq(("a", "b"), ("c%d", "a b")).foreach { case (a, b) =>
+      val dir = tmpDir("cdf_derive")
+      Sinks.deltaAppend(
+        Seq((1L, 10L, a), (2L, 20L, b)).toDF("id", "v", "p"), dir, Seq("p")) // v0
+      Sinks.deltaAppend(Seq((3L, 30L, a)).toDF("id", "v", "p"), dir, Seq("p")) // v1
+      Sinks.deltaDeletePartition(spark, dir, "p", a)                           // v2
+      val rows = Sinks.deltaChangeFeed(spark, dir, 0L, 2L)
+        .select(col("_commit_version"), col("_change_type"), col("id"), col("p"))
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
+        .sortBy(t => (t._1, t._3)).toSeq
+      assert(rows === Seq(
+        (1L, "insert", 3L, a),
+        (2L, "delete", 1L, a),
+        (2L, "delete", 3L, a)))
+    }
   }
 
   test("a PARTITIONED table's cdc run reads as ONE scan across partition tuples") {
-    val dir = tmpDir("cdf_part_scan")
-    Sinks.deltaAppend(
-      (0L until 30L).map(i => (i, i * 2, s"p${i % 3}")).toDF("id", "v", "p"),
-      dir, Seq("p"))
-    Sinks.deltaSetProperties(spark, dir, Map("delta.enableChangeDataFeed" -> "true"))
-    // one MERGE touching rows in all 3 partitions -> cdc files under 3
-    // partition dirs; the feed must still plan ONE FileScan for them
-    // (hive-layout single scan), not one leaf per partition tuple
-    Sinks.deltaMerge(spark, dir,
-      Seq((0L, 100L, "p0"), (1L, 101L, "p1"), (2L, 102L, "p2"))
-        .toDF("id", "v", "p"), "id")
-    val feed = Sinks.deltaChangeFeed(spark, dir, 1L, 2L)
-    val leaves = feed.queryExecution.optimizedPlan.collectLeaves().size
-    assert(leaves <= 3, s"3-partition cdc run planned $leaves leaves")
-    val rows = feed.select(col("_change_type"), col("id"), col("v"), col("p"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3)))
-      .sortBy(t => (t._1, t._2)).toSeq
-    assert(rows === Seq(
-      ("update_postimage", 0L, 100L, "p0"),
-      ("update_postimage", 1L, 101L, "p1"),
-      ("update_postimage", 2L, 102L, "p2"),
-      ("update_preimage", 0L, 0L, "p0"),
-      ("update_preimage", 1L, 2L, "p1"),
-      ("update_preimage", 2L, 4L, "p2")))
+    // the second table's values `a b` and `c%d` percent-encode in the scan
+    // path, which the per-file commit-version join must match
+    Seq(Seq("p0", "p1", "p2"), Seq("a b", "c%d", "e")).foreach { pv =>
+      val dir = tmpDir("cdf_part_scan")
+      Sinks.deltaAppend(
+        (0L until 30L).map(i => (i, i * 2, pv((i % 3).toInt))).toDF("id", "v", "p"),
+        dir, Seq("p"))
+      Sinks.deltaSetProperties(spark, dir, Map("delta.enableChangeDataFeed" -> "true"))
+      // one MERGE touching rows in all 3 partitions -> cdc files under 3
+      // partition dirs; the feed must still plan ONE FileScan for them
+      // (hive-layout single scan), not one leaf per partition tuple
+      Sinks.deltaMerge(spark, dir,
+        Seq((0L, 100L, pv(0)), (1L, 101L, pv(1)), (2L, 102L, pv(2)))
+          .toDF("id", "v", "p"), "id")
+      val feed = Sinks.deltaChangeFeed(spark, dir, 1L, 2L)
+      val leaves = feed.queryExecution.optimizedPlan.collectLeaves().size
+      assert(leaves <= 3, s"3-partition cdc run planned $leaves leaves")
+      val rows = feed.select(col("_change_type"), col("id"), col("v"), col("p"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getString(3)))
+        .sortBy(t => (t._1, t._2)).toSeq
+      assert(rows === Seq(
+        ("update_postimage", 0L, 100L, pv(0)),
+        ("update_postimage", 1L, 101L, pv(1)),
+        ("update_postimage", 2L, 102L, pv(2)),
+        ("update_preimage", 0L, 0L, pv(0)),
+        ("update_preimage", 1L, 2L, pv(1)),
+        ("update_preimage", 2L, 4L, pv(2))))
+      // every cdc file is labeled with the MERGE's commit
+      assert(feed.select(col("p"), col("_commit_version")).distinct()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toSet ===
+        pv.map(_ -> 2L).toSet)
+    }
   }
 
   test("a pre-enablement rewrite commit in the span fails loudly, naming the way out") {

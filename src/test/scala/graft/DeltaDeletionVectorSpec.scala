@@ -335,14 +335,28 @@ class DeltaDeletionVectorSpec extends AnyFunSuite {
   }
 
   test("DV delete on a PARTITIONED table filters only the targeted rows") {
-    val dir = tmpDir("dv_part")
-    Sinks.deltaAppend(
-      (0L until 20L).map(i => (i, i * 2, if (i < 10) "a" else "b"))
-        .toDF("id", "v", "g"), dir, Seq("g"))
-    Sinks.deltaDeleteVectors(spark, dir, "g = 'a' AND id >= 8")
-    val cat = DeltaCatalog.fromDeltaLog(spark, dir, "dv_p")
-    val byG = cat.read(spark, cat.files).groupBy(col("g")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(byG === Map("a" -> 8L, "b" -> 10L))
+    // (partition value of id i, predicate, live rows per value after it,
+    // partitions whose files carry a vector);
+    // the second table's values `a b` and `c%d` percent-encode in the
+    // scan path, so its vectors only land if the writer keys them by the
+    // path the scan reports
+    val inputs = Seq[(Long => String, String, Map[String, Long], Int)](
+      (i => if (i < 10) "a" else "b", "g = 'a' AND id >= 8",
+        Map("a" -> 8L, "b" -> 10L), 1),
+      (i => Seq("a b", "c%d", "e")((i % 3).toInt), "id >= 8 AND id < 12",
+        Map("a b" -> 6L, "c%d" -> 6L, "e" -> 4L), 3))
+    inputs.foreach { case (g, predicate, expected, dvPartitions) =>
+      val dir = tmpDir("dv_part")
+      Sinks.deltaAppend(
+        (0L until 20L).map(i => (i, i * 2, g(i)))
+          .toDF("id", "v", "g"), dir, Seq("g"))
+      Sinks.deltaDeleteVectors(spark, dir, predicate)
+      val cat = DeltaCatalog.fromDeltaLog(spark, dir, "dv_p")
+      val byG = cat.read(spark, cat.files).groupBy(col("g")).count()
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(byG === expected)
+      assert(cat.files.filter(f => cat.deletionVectors.contains(f.key))
+        .map(_.partitionValues).distinct.size === dvPartitions)
+    }
   }
 }

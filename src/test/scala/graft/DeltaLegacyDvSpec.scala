@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Sinks
-import graft.sources.{DeltaCatalog, DeletionVectors, FsUtil}
+import graft.sources.{DeltaCatalog, DeletionVectors}
 
 /** The pre-r10 deletion-vector dialect (parquet sidecar dirs under `_dv/`
   * referenced by `storageType "p"` descriptors with no sizing) must stay
@@ -22,12 +22,23 @@ class DeltaLegacyDvSpec extends AnyFunSuite {
   private def tmpDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
 
-  /** A table in the LEGACY dialect: two appended files, then a
-    * hand-authored v2 that deletes ids 3 and 12 via a `_dv/delete-*`
-    * parquet sidecar — byte-for-byte what the r8/r9 engine committed. */
-  private def legacyTable(dir: String): Unit = {
-    Sinks.deltaAppend((0L until 10L).map(i => (i, i * 2)).toDF("id", "v").coalesce(1), dir)
-    Sinks.deltaAppend((10L until 20L).map(i => (i, i * 2)).toDF("id", "v").coalesce(1), dir)
+  /** The scheme-stripped form the r8/r9 engine stored file paths in. */
+  private def stripScheme(path: String): String =
+    path.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/")
+
+  /** A table in the LEGACY dialect: two appends, then a hand-authored v2
+    * that deletes ids 3 and 12 via a `_dv/delete-*` parquet sidecar —
+    * byte-for-byte what the r8/r9 engine committed. Unpartitioned, each
+    * append is one file; partitioned on `g`, ids 3 and 12 both land
+    * under `g=a b`, a value the scan path percent-encodes. */
+  private def legacyTable(dir: String, partitioned: Boolean = false): Unit = {
+    def append(ids: Seq[Long]): Unit =
+      if (partitioned)
+        Sinks.deltaAppend(ids.map(i => (i, i * 2, Seq("a b", "c%d", "e")((i % 3).toInt)))
+          .toDF("id", "v", "g"), dir, Seq("g"))
+      else Sinks.deltaAppend(ids.map(i => (i, i * 2)).toDF("id", "v").coalesce(1), dir)
+    append(0L until 10L)
+    append(10L until 20L)
     val cat = DeltaCatalog.fromDeltaLog(spark, dir, "legacy_fixture")
     // row identities of the to-be-deleted rows, from the raw (pre-DV) view
     val idents = cat.read(spark, cat.files) // no DVs yet: plain read
@@ -35,8 +46,9 @@ class DeltaLegacyDvSpec extends AnyFunSuite {
       val c = DeltaCatalog.fromDeltaLog(spark, dir, "legacy_fixture_raw")
       c.readWithRowIndex(spark, c.files)
     }
-    val doomed = raw.filter(col("id").isin(3L, 12L))
-      .select(col("__gfp").as("__path"), col("__gri").as("__ri"))
+    val doomed = raw.filter(col("id").isin(3L, 12L)).select(
+      regexp_replace(col("__gfp"), "^[a-zA-Z][a-zA-Z0-9+.-]*:/+", "/").as("__path"),
+      col("__gri").as("__ri"))
     val batchRel = "_dv/delete-legacy-fixture"
     doomed.coalesce(1).write.parquet(s"$dir/$batchRel")
     val perFile = spark.read.parquet(s"$dir/$batchRel")
@@ -48,11 +60,15 @@ class DeltaLegacyDvSpec extends AnyFunSuite {
     // legacy descriptor (relative sidecar dir, cardinality, NO sizing),
     // exactly the action shape r8/r9 published (removes precede adds)
     val now = System.currentTimeMillis()
-    val lines = cat.files.map { f =>
-      val rawPath = rawByKey(f.key)
-      val card = perFile(FsUtil.normalizePath(f.key))
-      s"""{"remove":{"path":"$rawPath","deletionTimestamp":$now,"dataChange":true}}""" + "\n" +
-        s"""{"add":{"path":"$rawPath","size":${f.length},"partitionValues":{},"dataChange":true,"deletionVector":{"storageType":"p","pathOrInlineDv":"$batchRel","cardinality":$card}}}"""
+    val conf = spark.sessionState.newHadoopConf()
+    val lines = cat.files.flatMap { f =>
+      perFile.get(stripScheme(f.scanPath(conf))).map { card =>
+        val rawPath = rawByKey(f.key)
+        val pv = cat.partitionColumns.zip(f.partitionValues)
+          .map { case (c, v) => s""""$c":"$v"""" }.mkString(",")
+        s"""{"remove":{"path":"$rawPath","deletionTimestamp":$now,"dataChange":true}}""" + "\n" +
+          s"""{"add":{"path":"$rawPath","size":${f.length},"partitionValues":{$pv},"dataChange":true,"deletionVector":{"storageType":"p","pathOrInlineDv":"$batchRel","cardinality":$card}}}"""
+      }
     }
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/_delta_log/00000000000000000002.json"),
@@ -66,8 +82,12 @@ class DeltaLegacyDvSpec extends AnyFunSuite {
   }
 
   test("legacy-dialect tables READ green (deferred sidecar decode), and migrate in one commit") {
+    Seq(false, true).foreach(partitioned => legacyRoundTrip(partitioned))
+  }
+
+  private def legacyRoundTrip(partitioned: Boolean): Unit = {
     val dir = tmpDir("legacy_dv")
-    legacyTable(dir)
+    legacyTable(dir, partitioned)
     // read-only legacy decode: the deleted rows are gone, everything else reads
     assert(ids(dir) === (0L until 20L).filterNot(i => i == 3L || i == 12L))
     // MIGRATE: one commit, descriptors become protocol "u" .bin vectors
