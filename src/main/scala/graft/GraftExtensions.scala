@@ -16,11 +16,9 @@ import graft.functions._
   * [[graft.functions.GraftFunctions.registerAll]] for sessions built
   * without the conf (e.g. notebooks attaching to a running session).
   *
-  * Deterministic scalar kernels are injected, plus the
-  * [[graft.plans.SingleTaskSort]] planner strategy that [[Server.start]]
-  * installs; the operator surface (dedup, ANN, curation, catalogs) stays a
-  * plain Scala API because those are multi-statement plans, not
-  * expressions. */
+  * Only deterministic scalar kernels are injected; the operator surface
+  * (dedup, ANN, curation, catalogs) stays a plain Scala API because those
+  * are multi-statement plans, not expressions. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def intLit(e: Expression, what: String): Int = e match {
@@ -35,7 +33,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "", "", "", "", "", "", "built-in")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectPlannerStrategy(_ => graft.plans.SingleTaskSort)
     def inject(name: String, usage: String)(builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((FunctionIdentifier(name), info(name, usage), builder))
 

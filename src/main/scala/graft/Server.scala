@@ -48,9 +48,8 @@ object Server {
   val ArrowMime = "application/vnd.apache.arrow.stream"
 
   /** Start serving on `port` (0 = ephemeral). Every request executes in
-    * `spark` itself, on which the graft SQL kernels and the
-    * [[graft.plans.SingleTaskSort]] strategy are installed once here: the
-    * engine binds each query's statements to its own inputs
+    * `spark` itself, on which the graft SQL kernels are registered once
+    * here: the engine binds each query's statements to its own inputs
     * without touching the session catalog, so concurrent requests that
     * share catalog and step names cannot see each other's relations.
     * Session state a caller sets (conf, temp views, functions) is visible
@@ -64,7 +63,6 @@ object Server {
       idleShutdownMs: Option[Long] = None,
       onStop: () => Unit = () => ()): HttpServer = {
     graft.functions.GraftFunctions.registerAll(spark)
-    graft.plans.SingleTaskSort.install(spark)
     val engine = new BuzzEngine(Map.empty)
     val server = HttpServer.create(new InetSocketAddress(port), 0)
 

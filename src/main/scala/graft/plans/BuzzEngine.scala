@@ -21,7 +21,9 @@ import graft.sources.{CatalogResolver, SchemaVerifier, SizedFile, SplittableCata
   * automatically, and schedules file splits across executors — which is
   * exactly the hbee/hcomb fleet, minus the bespoke transport. No collect()
   * happens between the stages, so the exchange stays pipelined and
-  * spillable at 100 TB.
+  * spillable at 100 TB. A request that reads little
+  * ([[PrunedPlan.readsOnePartition]]) reads its files in one partition
+  * instead, so it runs as one job with one task and no exchange.
   */
 final class BuzzEngine(
     catalogs: Map[String, SplittableCatalog],
@@ -75,7 +77,7 @@ final class BuzzEngine(
         p.files.map(_.key), p.catalog.schema, spark.sessionState.newHadoopConf(),
         missingNullableOk = p.catalog.missingNullableOk)
     val source = p.catalog.read(spark, p.files)
-    val mapDf = p.map.bind(spark, source.queryExecution.analyzed)
+    val mapDf = p.map.bind(spark, p.mapInput(spark, source.queryExecution.analyzed))
     p.reduce.bind(spark, mapDf.queryExecution.analyzed)
   }
 
@@ -85,7 +87,8 @@ final class BuzzEngine(
   /** DRY-RUN plan introspection: validate and plan the query WITHOUT
     * executing it, and report what execution would do — catalog identity,
     * format, file counts at each pruning stage (partition filter, then
-    * zone-map footer pruning), bytes to read, both derived output
+    * zone-map footer pruning), bytes to read and whether the map step
+    * reads them in one partition, both derived output
     * schemas as DDL, and whether the reduce aggregates the map output
     * again or only projects it (see [[Statement.collapseUniqueGroups]]).
     * This is the "what will this query touch" answer an
@@ -108,7 +111,8 @@ final class BuzzEngine(
         ("total" -> p.catalog.files.size) ~
         ("after_partition_filter" -> p.filesAfterPartition) ~
         ("after_zone_pruning" -> p.files.size) ~
-        ("bytes_to_read" -> p.files.map(_.length).sum)) ~
+        ("bytes_to_read" -> p.files.map(_.length).sum) ~
+        ("one_partition" -> p.readsOnePartition)) ~
       ("map" ->
         ("name" -> p.mapStep.name) ~
         ("sql" -> p.mapStep.sql) ~
@@ -141,17 +145,9 @@ final class BuzzEngine(
       val rows =
         try df.collect()
         catch { case e: Throwable => throw attributeWorkerFailure(spark, e, p.files) }
-      // the listener bus is async: wait until task-end and stage-completed
-      // events stop arriving
-      var last = -1L
-      var stableChecks = 0
-      var waitedMs = 0
-      while (stableChecks < 2 && waitedMs < 2000) {
-        val t = listener.tasks.sum() + listener.stages.sum()
-        if (t == last) stableChecks += 1 else { stableChecks = 0; last = t }
-        Thread.sleep(50)
-        waitedMs += 50
-      }
+      // the listener bus is async, but the scheduler posts every event of
+      // a job before `collect` returns: deliver those, then read
+      org.apache.spark.sql.graft.PlanBridge.drainListeners(spark.sparkContext)
       (rows, listener.summary + ("scan_time_ms" -> scanTimeMs(df.queryExecution.executedPlan)))
     } finally {
       spark.sparkContext.removeSparkListener(listener)

@@ -1,8 +1,9 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation, LogicalPlan, Repartition}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 import graft.model._
@@ -13,7 +14,8 @@ import graft.sources.{SizedFile, SplittableCatalog}
   * steps and their parsed statements, the derived output schemas, and
   * whether the bound reduce still aggregates on its own (false when it
   * only projects, including a re-aggregation collapsed by
-  * [[Statement.collapseUniqueGroups]]).
+  * [[Statement.collapseUniqueGroups]]), and whether the map step reads
+  * its files in one partition ([[PrunedPlan.readsOnePartition]]).
   * Reference: `DistributedPlan` at
   * `/root/reference/code/src/services/fuse/query_planner.rs:17-44`. Spark
   * owns zone/worker assignment, so zones collapse to a partition count. */
@@ -27,7 +29,8 @@ final case class DistributedPlan(
     reduce: Statement,
     mapOutputSchema: StructType,
     reduceOutputSchema: StructType,
-    reduceReaggregates: Boolean)
+    reduceReaggregates: Boolean,
+    readsOnePartition: Boolean)
 
 /** [[DistributedPlan]] minus what binding derives (the output schemas and
   * whether the reduce re-aggregates): everything the
@@ -42,7 +45,27 @@ final case class PrunedPlan(
     mapStep: BuzzStep,
     reduceStep: BuzzStep,
     map: Statement,
-    reduce: Statement)
+    reduce: Statement) {
+
+  /** Whether the map step reads all its files in ONE partition: when their
+    * lengths total at most
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize`, the size
+    * below which AQE would merge a shuffle's output into one task anyway.
+    * One partition satisfies the distribution both the reduce's aggregate
+    * and its sort require, so Spark plans no exchange and the whole
+    * request runs as one job with one task, as the reference's `MergeExec`
+    * + single hcomb do (SURVEY §4). Above the bound Spark splits the scan
+    * across tasks as usual. */
+  def readsOnePartition(conf: SQLConf): Boolean =
+    files.iterator.map(_.length).sum <=
+      conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE)
+
+  /** What the map statement binds to: `source`, merged into one partition
+    * without a shuffle when [[readsOnePartition]]. */
+  def mapInput(spark: SparkSession, source: LogicalPlan): LogicalPlan =
+    if (readsOnePartition(spark.sessionState.conf)) Repartition(1, shuffle = false, source)
+    else source
+}
 
 /** Validates a two-step buzz query and prunes the catalog, mirroring
   * `QueryPlanner.plan` (`/root/reference/code/src/services/fuse/
@@ -67,13 +90,15 @@ final class QueryPlanner(catalogs: Map[String, SplittableCatalog]) {
     * binds each statement once, to the real source, instead. */
   def plan(spark: SparkSession, query: BuzzQuery): DistributedPlan = {
     val v = validateAndPrune(spark, query)
-    val mapDf = v.map.bind(spark, LocalRelation(DataTypeUtils.toAttributes(v.catalog.fullSchema)))
+    val mapDf = v.map.bind(spark,
+      v.mapInput(spark, LocalRelation(DataTypeUtils.toAttributes(v.catalog.fullSchema))))
     val reduceDf = v.reduce.bind(spark, mapDf.queryExecution.analyzed)
     def aggregates(df: DataFrame) =
       df.queryExecution.analyzed.collect { case a: Aggregate => a }.size
     DistributedPlan(v.catalog, v.files, v.filesAfterPartition, v.mapStep, v.reduceStep,
       v.map, v.reduce, mapDf.schema, reduceDf.schema,
-      reduceReaggregates = aggregates(reduceDf) > aggregates(mapDf))
+      reduceReaggregates = aggregates(reduceDf) > aggregates(mapDf),
+      readsOnePartition = v.readsOnePartition(spark.sessionState.conf))
   }
 
   /** Structural validation + file pruning — every plan-SHAPE error (step

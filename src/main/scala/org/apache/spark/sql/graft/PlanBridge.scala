@@ -1,9 +1,9 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.SparkStrategy
 import org.apache.spark.sql.types.StructType
 
 /** Bridge into Spark's `private[sql]` DataFrame-from-LogicalPlan
@@ -21,14 +21,7 @@ object PlanBridge {
     * (`StructType.asNullable` is `private[spark]`). */
   def asNullable(schema: StructType): StructType = schema.asNullable
 
-  /** Adds `strategy` to the extensions `spark` was built with, unless they
-    * already build it. A session's planner asks its extensions for their
-    * strategies at every planning, and `newSession()` hands the same
-    * extensions to every session it forks, so `spark` and its forks all
-    * plan with `strategy` from the next query on. */
-  def injectStrategyOnce(spark: SparkSession, strategy: SparkStrategy): Unit = {
-    val ext = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].extensions
-    if (!ext.buildPlannerStrategies(spark).contains(strategy))
-      ext.injectPlannerStrategy(_ => strategy)
-  }
+  /** Blocks until `sc`'s listeners have received every event posted so
+    * far (`listenerBus` is `private[spark]`). */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -52,12 +52,18 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("runAndCollect surfaces per-query worker metrics (hbee_service.rs:45-52 parity)") {
-    val (rows, metrics) = engine.runAndCollect(spark, BuzzQuery(
-      Seq(
-        BuzzStep("SELECT event_type, count(*) AS cnt FROM events GROUP BY event_type",
-          "events_map", BuzzStepType.HBee, None),
-        BuzzStep("SELECT sum(cnt) AS total FROM events_map", "r", BuzzStepType.HComb, None)),
-      BuzzCapacity(1), Nil))
+    // a bound below the events table's size keeps the map→reduce exchange
+    // (a smaller read runs in one partition, with no shuffle to measure)
+    val bound = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    spark.conf.set(bound, "1b")
+    val (rows, metrics) =
+      try engine.runAndCollect(spark, BuzzQuery(
+        Seq(
+          BuzzStep("SELECT event_type, count(*) AS cnt FROM events GROUP BY event_type",
+            "events_map", BuzzStepType.HBee, None),
+          BuzzStep("SELECT sum(cnt) AS total FROM events_map", "r", BuzzStepType.HComb, None)),
+        BuzzCapacity(1), Nil))
+      finally spark.conf.unset(bound)
     assert(rows.length == 1)
     assert(metrics("processed_rows") > 0, s"metrics: $metrics")
     assert(metrics("downloaded_bytes") > 0, s"metrics: $metrics")

@@ -33,12 +33,6 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(row.getString(2) == "en")
       assert(row.getSeq[String](3) == Seq("a b", "b a"))
       assert(row.getInt(4) == 1)
-      // the planner strategy rides along, once, and the server's own
-      // install finds it instead of adding a second copy
-      def copies = s.sessionState.planner.strategies.count(_ eq graft.plans.SingleTaskSort)
-      assert(copies == 1)
-      Server.start(s, 0).stop(0)
-      assert(copies == 1)
     } finally {
       SparkSession.setDefaultSession(existing)
       SparkSession.setActiveSession(existing)

@@ -73,9 +73,16 @@ class PlanQualitySpec extends AnyFunSuite {
   }
 
   test("two-stage engine query is one Spark plan with an exchange, no collect") {
-    val df = SparkEntry.queries("q3_two_stage")(spark, TestSpark.sf)
-    val plan = df.queryExecution.executedPlan.toString()
-    assert(plan.contains("Exchange") || plan.contains("AQEShuffleRead"),
+    def plan(): String =
+      SparkEntry.queries("q3_two_stage")(spark, TestSpark.sf).queryExecution.executedPlan.toString()
+    // the small events read runs in one partition, with no exchange at all
+    val small = plan()
+    assert(small.contains("Coalesce 1") && !small.contains("Exchange"), small)
+    // a read above minPartitionSize keeps the map/reduce shuffle
+    val bound = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    spark.conf.set(bound, "1b")
+    val large = try plan() finally spark.conf.unset(bound)
+    assert(large.contains("Exchange") || large.contains("AQEShuffleRead"),
       "map/reduce boundary should be a shuffle exchange inside one plan")
   }
 
